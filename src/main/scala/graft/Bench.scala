@@ -250,8 +250,8 @@ object Bench {
         // Per-trigger file cap: the RelayConfig DEFAULT is the tuned
         // drain setting (256 files/trigger — the measured curve lives
         // in SCALING.md §Relay), so the committed artifact benches the
-        // configuration a user gets out of the box. The env override
-        // exists only for the tuning sweep.
+        // configuration a user gets out of the box. The curve itself is
+        // swept with RelayThroughput's cap argument.
         val relayReps = math.max(1,
           sys.env.getOrElse("SPARK_GRAFT_RELAY_REPS", "3").toInt)
         // relay_events records the MINIMUM delivered count over the
@@ -261,11 +261,8 @@ object Bench {
         var minRelayed = Long.MaxValue
         val rates = (0 to relayReps).flatMap { rep =>
           val counted = rep > 0 // rep 0 = uncounted plan/codegen warmup
-          val base = graft.streaming.CdcRelay.RelayConfig(
+          val cfg = graft.streaming.CdcRelay.RelayConfig(
             s"$root/in", s"$root/out$rep", s"$root/chk$rep")
-          val cfg = sys.env.get("SPARK_GRAFT_RELAY_MFPT")
-            .map(v => base.copy(maxFilesPerTrigger = Some(v.toInt)))
-            .getOrElse(base)
           val t0 = System.nanoTime()
           graft.streaming.CdcRelay.start(spark, cfg).awaitTermination()
           val secs = (System.nanoTime() - t0) / 1e9

@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.DatasetBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 import graft.functions.CdcFunctions._
@@ -61,16 +63,21 @@ object CdcRelay {
         * "profile-appropriate": [[start]] resolves it to the tuned
         * drain setting [[RelayConfig.DrainMaxFilesPerTrigger]] from the
         * measured batch-size→throughput curve (SCALING.md §Relay: each
-        * trigger pays a ~0.5-1 s commit barrier, so throughput scales
-        * with events-per-trigger until executor parallelism saturates;
-        * 256 files kept the sf1 drain at 163-184k events/s vs 52k at
-        * 32), while [[startContinuous]] resolves it to the reference's
-        * latency-oriented batching analog
+        * trigger pays a fixed cost outside its `addBatch` — offset,
+        * WAL and commit at ~35-40 ms each, planning ~70 ms, ~0.22 s in
+        * all on the perfbench `relay_drain` trace — so throughput
+        * scales with events-per-trigger until executor parallelism
+        * saturates; 256 files kept the sf1 drain at 163-184k events/s
+        * vs 52k at 32), while [[startContinuous]] resolves it to the
+        * reference's latency-oriented batching analog
         * [[RelayConfig.LiveMaxFilesPerTrigger]] via
         * [[RelayConfig.liveProfile]]. `Some(n)` — ANY n, including
         * 256 — is the operator's explicit choice and is never swapped
         * (an Int field couldn't distinguish an explicit 256 from the
-        * unset default, which silently gave such a caller 8).
+        * unset default, which silently gave such a caller 8). At any
+        * cap the source lists a trigger's admitted files in the driver
+        * (see [[CdcRelay.start]]'s source session), never with a
+        * Spark job of one task per file.
         */
       maxFilesPerTrigger: Option[Int] = None,
       /** A4 idle throttle (reference `--idle-interval-ms`): the pacing
@@ -198,7 +205,7 @@ object CdcRelay {
       * the driver corpora makes 8 files per trigger the same order as
       * the reference's latency-oriented `--event-count-max` default of
       * 4096 events/poll (config.go:40) while still amortizing the
-      * per-trigger commit barrier over a few files.
+      * per-trigger fixed cost over a few files.
       */
     val LiveMaxFilesPerTrigger: Int = 8
 
@@ -246,11 +253,6 @@ object CdcRelay {
     envelopeProjection(df, cfg.subjectPrefix, cfg.clusterId,
       cfg.subjectMode, cfg.singleSubject)
 
-  /** Start the relay. `Trigger.AvailableNow` drains everything currently
-    * in the input dir and stops — the batch-mode analog of the
-    * reference's poll loop, and what the resume test uses; pass a
-    * processing-time trigger for a long-running relay.
-    */
   /** Envelope (output) schema, for sink provisioning/validation. */
   val envelopeSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
@@ -265,6 +267,31 @@ object CdcRelay {
     StructField("h_credit_account_code", StringType),
     StructField("body", StringType)))
 
+  /** The session the file source is created under. `FileStreamSource`
+    * rebuilds a file index over each trigger's admitted files on every
+    * `getBatch`, with the conf of the session that created the source;
+    * above `parallelPartitionDiscovery.threshold` paths (32 by default)
+    * that index lists them with a Spark job of one task per file. A
+    * private copy of `spark`'s conf whose threshold covers the
+    * per-trigger cap lists them in the driver instead. Only the source
+    * lives in the copy, which carries none of `spark`'s listeners: the
+    * query, `spark.streams` and its listeners stay on `spark`, whose
+    * conf is untouched. The copy is taken when the relay starts, so
+    * later conf changes on `spark` do not reach the source.
+    */
+  private def sourceSession(spark: SparkSession, cfg: RelayConfig): SparkSession = {
+    val clone = DatasetBridge.confClone(spark)
+    val key = SQLConf.PARALLEL_PARTITION_DISCOVERY_THRESHOLD.key
+    val cap = cfg.effectiveMaxFilesPerTrigger.toLong
+    if (clone.conf.get(key).toLong < cap) clone.conf.set(key, cap)
+    clone
+  }
+
+  /** Start the relay. `Trigger.AvailableNow` drains everything currently
+    * in the input dir and stops — the batch-mode analog of the
+    * reference's poll loop, and what the resume test uses; pass a
+    * processing-time trigger for a long-running relay.
+    */
   def start(spark: SparkSession, rawCfg: RelayConfig,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     // A19 pre-flight: reject an invalid config with the full mismatch
@@ -283,11 +310,12 @@ object CdcRelay {
         Some(CheckpointLease.acquire(spark, cfg.checkpointDir,
           version = s"graft-relay/${cfg.clusterId}"))
       else None
-    val in = spark.readStream
-      .schema(inputSchema)
-      // A5: the rate ceiling shrinks the per-trigger admission cap
-      .option("maxFilesPerTrigger", cfg.effectiveMaxFilesPerTrigger)
-      .parquet(cfg.inputDir)
+    val in = DatasetBridge.ofRows(spark,
+      DatasetBridge.analyzedPlan(sourceSession(spark, cfg).readStream
+        .schema(inputSchema)
+        // A5: the rate ceiling shrinks the per-trigger admission cap
+        .option("maxFilesPerTrigger", cfg.effectiveMaxFilesPerTrigger)
+        .parquet(cfg.inputDir)))
     // A2 override: strict > on the event timestamp (reference resumes
     // from last+1); ts is micros here, the flag value raw nanos
     val bounded = cfg.timestampLast.fold(in) { ns =>

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
@@ -65,25 +66,25 @@ object SinkProvisioner {
     */
   final case class Corrupt(cause: Throwable) extends SinkState
 
-  private def hasDataFiles(dir: java.io.File): Boolean =
-    dir.listFiles() match {
-      case null => false
-      case fs => fs.exists { f =>
-        val n = f.getName
-        if (f.isDirectory) hasDataFiles(f)
-        else !n.startsWith("_") && !n.startsWith(".")
-      }
+  private def hasDataFiles(fs: FileSystem, dir: Path): Boolean =
+    fs.listStatus(dir).exists { f =>
+      val n = f.getPath.getName
+      if (f.isDirectory) hasDataFiles(fs, f.getPath)
+      else !n.startsWith("_") && !n.startsWith(".")
     }
 
   /** Inspect a sink directory. Partition columns are discovered from
     * the `name=value` directory layout (walking nested levels), so a
     * provisioned partitioned sink validates clean on restart instead of
-    * reporting a phantom partitioning mismatch.
+    * reporting a phantom partitioning mismatch. The probe goes through
+    * the Hadoop FileSystem of the path, so a URI sink (`file:`,
+    * `hdfs://`, `s3a://`) reads as what it holds, never as `Absent`.
     */
   def inspect(spark: SparkSession, path: String): SinkState = {
-    val dir = new java.io.File(path)
-    if (!dir.exists()) Absent
-    else if (!hasDataFiles(dir)) Empty
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) Absent
+    else if (!hasDataFiles(fs, dir)) Empty
     else {
       val readAttempt =
         try Right(spark.read.parquet(path).schema)
@@ -91,18 +92,11 @@ object SinkProvisioner {
       readAttempt match {
         case Left(e) => Corrupt(e)
         case Right(schema) =>
-          def partitionCols(d: java.io.File): Seq[String] =
-            d.listFiles() match {
-              case null => Nil
-              case fs => fs.filter(_.isDirectory).map(_.getName)
-                .collectFirst { case n if n.contains("=") => n.split("=", 2)(0) }
-                .map { c =>
-                  val next = fs.filter(_.isDirectory)
-                    .find(_.getName.startsWith(c + "=")).get
-                  c +: partitionCols(next)
-                }
-                .getOrElse(Nil)
-            }
+          def partitionCols(d: Path): Seq[String] =
+            fs.listStatus(d).filter(_.isDirectory).map(_.getPath)
+              .find(_.getName.contains("="))
+              .map(next => next.getName.split("=", 2)(0) +: partitionCols(next))
+              .getOrElse(Nil)
           Present(SinkSpec(path, schema, partitionColumns = partitionCols(dir)))
       }
     }

@@ -53,7 +53,7 @@ object RelayResumeProbe {
 
     // mid-size epochs: the kill lands mid-drain with several epochs
     // committed, and the crash-replayed epoch is a measurable slice
-    val mfpt = sys.env.getOrElse("SPARK_GRAFT_RELAY_MFPT", "64").toInt
+    val mfpt = 64
     val cfg = graft.streaming.CdcRelay.RelayConfig(
       in, s"$root/out", s"$root/chk", maxFilesPerTrigger = Some(mfpt))
     def outCount(): Long = spark.read.parquet(cfg.outputDir).count()

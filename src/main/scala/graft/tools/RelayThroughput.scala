@@ -14,7 +14,10 @@ import org.apache.spark.sql.SparkSession
   * dispatch → envelope/headers → dedup → sink with epoch commit) and
   * reports end-to-end events/sec including checkpointing.
   *
-  *   sbt "runMain graft.tools.RelayThroughput [sfDir]"
+  *   sbt "runMain graft.tools.RelayThroughput [sfDir] [maxFilesPerTrigger]"
+  *
+  * The optional cap sweeps the per-trigger batch-size curve; left out,
+  * the relay runs with the `RelayConfig` default.
   */
 object RelayThroughput {
   def main(args: Array[String]): Unit = {
@@ -47,11 +50,11 @@ object RelayThroughput {
       .sortWithinPartitions("ts").write.parquet(in)
     graft.Stage.orderStagedFiles(in)
 
-    // per-trigger batch size knob (reference --event-count-max analog):
-    // sweepable for the throughput-vs-trigger-granularity curve
-    val mfpt = sys.env.getOrElse("SPARK_GRAFT_RELAY_MFPT", "32").toInt
+    // per-trigger batch size (reference --event-count-max analog)
     val cfg = graft.streaming.CdcRelay.RelayConfig(
-      in, s"$root/out", s"$root/chk", maxFilesPerTrigger = Some(mfpt))
+      in, s"$root/out", s"$root/chk",
+      maxFilesPerTrigger = args.lift(1).map(_.toInt))
+    val mfpt = cfg.effectiveMaxFilesPerTrigger
     val t0 = System.nanoTime()
     graft.streaming.CdcRelay.start(spark, cfg).awaitTermination()
     val secs = (System.nanoTime() - t0) / 1e9

@@ -14,6 +14,29 @@ object DatasetBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A new session over the same SparkContext and shared state with a
+    * copy of every SQL conf entry of `spark` (set directly on the
+    * SQLConf, as `SQLConf.clone` does, so entries fixed at session
+    * build carry over too). Conf changes on the copy do not reach
+    * `spark`, and vice versa. Unlike `cloneSession` it copies no temp
+    * views, functions or query execution listeners: a clone of a
+    * session with such listeners registers its own listener bus on the
+    * SparkContext, which stays there until the clone is collected.
+    */
+  def confClone(spark: SparkSession): SparkSession = {
+    val clone = spark.newSession().asInstanceOf[classic.SparkSession]
+    val conf = clone.sessionState.conf
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf.getAllConfs
+      .foreach { case (k, v) => conf.setConfString(k, v) }
+    clone
+  }
+
+  /** A DataFrame's analyzed plan, with its relations resolved in the
+    * DataFrame's own session; [[ofRows]] re-roots it in another one.
+    */
+  def analyzedPlan(df: DataFrame): LogicalPlan =
+    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
   /** Wrap a raw Catalyst Expression into a public Column
     * (`classic.ExpressionUtils.column` is `private[sql]`) — needed for
     * parameterized native expressions that can't register as SQL

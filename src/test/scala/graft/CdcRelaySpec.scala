@@ -30,6 +30,26 @@ class CdcRelaySpec extends AnyFunSuite {
     Files.move(part.toPath, new java.io.File(s"$dir/$file").toPath)
   }
 
+  /** `n` one-event files `m000.parquet`.. in `dir`, event i at
+    * `base + i` seconds, written by one Spark job.
+    */
+  private def writeManyEvents(dir: String, n: Int, base: Long): Unit = {
+    val data = (0 until n).map { i =>
+      Row(i.toLong, new java.sql.Timestamp((base + i * 1000000L) / 1000),
+        i.toLong % 5, "view", 1.0, """{"k": 1}""")
+    }
+    // one row per slice, so one part file per event
+    spark.createDataFrame(spark.sparkContext.parallelize(data, n),
+        CdcRelay.inputSchema)
+      .write.mode("overwrite").parquet(s"$dir/_stage")
+    val parts = new java.io.File(s"$dir/_stage").listFiles()
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(parts.length == n)
+    parts.zipWithIndex.foreach { case (part, i) =>
+      Files.move(part.toPath, new java.io.File(f"$dir/m$i%03d.parquet").toPath)
+    }
+  }
+
   test("relay resumes from checkpoint and suppresses duplicate msg-ids") {
     val root = Files.createTempDirectory("relay").toString
     val in = s"$root/in"; new java.io.File(in).mkdirs()
@@ -303,5 +323,109 @@ class CdcRelaySpec extends AnyFunSuite {
       System.nanoTime() < deadline) Thread.sleep(100)
     CdcRelay.start(spark, cfg).awaitTermination()
     assert(spark.read.parquet(cfg.outputDir).count() == 1)
+  }
+
+  test("a sink given as a file: URI keeps its rows across a restart") {
+    // the sink probe must see through the URI: read as Absent, the
+    // provisioning overwrite would wipe the first run's output
+    val root = Files.createTempDirectory("relay-uri").toString
+    val in = s"$root/in"; new java.io.File(in).mkdirs()
+    val cfg = RelayConfig(in, new java.io.File(s"$root/out").toURI.toString,
+      s"$root/chk")
+    assert(cfg.outputDir.startsWith("file:"))
+    val base = 1700000000000000L
+    writeEvents(in, "b1.parquet", Seq(
+      (1L, base + 1000000L, 7L, "purchase"),
+      (2L, base + 2000000L, 8L, "click")))
+    CdcRelay.start(spark, cfg).awaitTermination()
+    assert(spark.read.parquet(cfg.outputDir).count() == 2)
+    writeEvents(in, "b2.parquet", Seq((3L, base + 3000000L, 9L, "error")))
+    CdcRelay.start(spark, cfg).awaitTermination()
+    val ids = spark.read.parquet(cfg.outputDir).select("event_id")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(1L, 2L, 3L), ids.mkString(","))
+  }
+
+  test("a trigger of more than 32 files lists them without a Spark job") {
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    import org.apache.spark.graft.ListenerBusProbe
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.graftbridge.DatasetBridge
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("relay-list").toString
+    val in = s"$root/in"; new java.io.File(in).mkdirs()
+    val files = 40
+    writeManyEvents(in, files, 1700000000000000L)
+    val thresholdKey = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val confBefore = spark.conf.getAll
+    assert(confBefore.get(thresholdKey).forall(_.toInt < files))
+    // every epoch's progress still reaches the caller's spark.streams
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = {
+        progress.add(e.progress.batchId); ()
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val sc = spark.sparkContext
+    try {
+      val listings =
+        HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+      CdcRelay.start(spark, RelayConfig(in, s"$root/out0", s"$root/chk0"))
+        .awaitTermination()
+      assert(HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount ==
+        listings, "the file source launched a parallel listing job")
+      assert(spark.read.parquet(s"$root/out0").count() == files)
+      ListenerBusProbe.drain(sc)
+      val committed = new java.io.File(s"$root/chk0/commits").listFiles()
+        .map(_.getName).filter(_.forall(_.isDigit)).map(_.toLong).toSet
+      import scala.jdk.CollectionConverters._
+      assert(committed.nonEmpty && progress.asScala.toSet == committed,
+        s"progress ${progress.asScala.mkString(",")} vs commits " +
+          committed.mkString(","))
+      // the caller's conf is untouched
+      assert(spark.conf.getAll == confBefore)
+      // the source session registers nothing that outlives the query.
+      // A stateful query's own session clone already leaves one listener
+      // on the bus per start (its state store coordinator's query
+      // manager), so the relay is held to a plain stateful stream over
+      // the same input. Both start on a session without query execution
+      // listeners: each clone of a session with such listeners registers
+      // a bus until the clone is garbage collected, so counts would
+      // depend on GC timing. Listeners removed meanwhile do not count.
+      val caller = spark.newSession()
+      caller.streams.active // its own query manager registers up front
+      def added(start: Int => Any): Int = {
+        ListenerBusProbe.drain(sc)
+        val before = ListenerBusProbe.listeners(sc)
+        (1 to 5).foreach(start)
+        ListenerBusProbe.drain(sc)
+        (ListenerBusProbe.listeners(sc) -- before).size
+      }
+      val plain = added { i =>
+        caller.readStream.schema(CdcRelay.inputSchema).parquet(in)
+          .withWatermark("ts", "2 minutes")
+          .dropDuplicatesWithinWatermark("event_id")
+          .writeStream.format("noop")
+          .option("checkpointLocation", s"$root/plain$i")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start().awaitTermination()
+      }
+      assert(added { i =>
+        CdcRelay.start(caller, RelayConfig(in, s"$root/out$i", s"$root/chk$i"))
+          .awaitTermination()
+      } == plain)
+      // the source session copies none of the caller's query execution
+      // listeners, so it never registers a bus of its own
+      caller.listenerManager.register(new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = ()
+        override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
+      assert(added(_ => DatasetBridge.confClone(caller)) == 0)
+    } finally spark.streams.removeListener(listener)
   }
 }
