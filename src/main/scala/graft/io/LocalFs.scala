@@ -1,0 +1,91 @@
+package graft.io
+
+import java.net.URI
+import java.nio.file.{FileSystems, Files}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
+
+/** The `file:` FileContext (AbstractFileSystem) that Spark's streaming
+  * checkpoint files go through: offset/commit logs, file-source logs and
+  * state-store delta/snapshot files. Built like Hadoop's
+  * `org.apache.hadoop.fs.local.LocalFs` — a `ChecksumFs` over a raw local
+  * file system, so `.crc` sidecars behave as before — except that the
+  * raw file system does not fork a process where Hadoop's does without
+  * its native library: `chmod` on every create and mkdir, and `readlink`
+  * on every link-status probe (a rename probes its source and target).
+  *
+  * Hadoop instantiates it reflectively with `(URI, Configuration)`; like
+  * Hadoop's `LocalFs` it ignores the URI.
+  */
+class LocalFs(uri: URI, conf: Configuration)
+    extends ChecksumFs(new LocalFs.RawFs(conf))
+
+object LocalFs {
+
+  val ImplKey = "fs.AbstractFileSystem.file.impl"
+  private val HadoopDefault = "org.apache.hadoop.fs.local.LocalFs"
+
+  /** Route the SparkContext's `file:` FileContexts to [[LocalFs]]. Hadoop
+    * builds a FileContext from the configuration on every use, so this
+    * reaches every checkpoint file manager a stream creates afterwards.
+    * Idempotent; a value other than Hadoop's default is an explicit
+    * choice and is kept.
+    */
+  def install(spark: SparkSession): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    if (conf.get(ImplKey) == HadoopDefault)
+      conf.set(ImplKey, classOf[LocalFs].getName)
+  }
+
+  /** Hadoop's `RawLocalFs`, over [[ForkFreeRawLocalFileSystem]]. */
+  private[io] class RawFs(conf: Configuration)
+      extends DelegateToFileSystem(FsConstants.LOCAL_FS_URI,
+        new ForkFreeRawLocalFileSystem, conf,
+        FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def getServerDefaults: FsServerDefaults =
+      LocalConfigKeys.getServerDefaults()
+    override def isValidName(src: String): Boolean = true
+  }
+
+  private val unixModes =
+    FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
+  private val StickyBit = 0x200      // 01000
+  private val SetIdBits = 0xc00      // 06000
+  private val DirType = 0x4000       // 040000
+  private val TypeMask = 0xf000      // 0170000
+
+  private[io] class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
+
+    /** `chmod %04o` without the process: like GNU chmod's numeric mode,
+      * a directory keeps its set-uid/set-gid bits and a file loses
+      * them. A sticky bit, or a store without unix modes, takes Hadoop's
+      * own path.
+      */
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      val mode = permission.toShort.toInt
+      if (!unixModes || (mode & StickyBit) != 0) super.setPermission(p, permission)
+      else {
+        val file = pathToFile(p).toPath
+        val cur = Files.getAttribute(file, "unix:mode").asInstanceOf[Int]
+        val keep = if ((cur & TypeMask) == DirType) cur & SetIdBits else 0
+        Files.setAttribute(file, "unix:mode", Int.box((mode & 0x1ff) | keep))
+      }
+    }
+
+    /** A path that is no symlink gets its plain status, as Hadoop returns
+      * it once `readlink` finds no link (a missing path throws
+      * `FileNotFoundException` from `getFileStatus`); real and dangling
+      * symlinks take Hadoop's own path.
+      */
+    override def getFileLinkStatus(f: Path): FileStatus =
+      if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+      else getFileStatus(f)
+  }
+}

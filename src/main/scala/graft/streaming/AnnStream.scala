@@ -112,6 +112,7 @@ object AnnStream {
   def start(spark: SparkSession, queries: DataFrame, sfDir: String,
             outDir: String, chkDir: String, k: Int = 5,
             nprobe: Int = DefaultNprobe): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     graft.plans.GraftExtensions.register(spark)
     val indexed = nprobe > 0
     // On the indexed path the corpus carries its trained cell id; the

@@ -111,7 +111,8 @@ object AttributionStream {
     * other foreachBatch streams (a replayed epoch overwrites its own
     * partition). */
   def start(events: Dataset[Event], outDir: String,
-      chkDir: String): StreamingQuery =
+      chkDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(events.sparkSession)
     attributions(events).toDF().writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", chkDir)
@@ -125,4 +126,5 @@ object AttributionStream {
         ()
       }
       .start()
+  }
 }

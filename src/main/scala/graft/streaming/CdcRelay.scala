@@ -63,9 +63,11 @@ object CdcRelay {
         * "profile-appropriate": [[start]] resolves it to the tuned
         * drain setting [[RelayConfig.DrainMaxFilesPerTrigger]] from the
         * measured batch-size→throughput curve (SCALING.md §Relay: each
-        * trigger pays a fixed cost outside its `addBatch` — offset,
-        * WAL and commit at ~35-40 ms each, planning ~70 ms, ~0.22 s in
-        * all on the perfbench `relay_drain` trace — so throughput
+        * trigger pays a fixed cost outside its `addBatch` — planning
+        * ~35 ms, offset, WAL and commit at ~4-7 ms each, ~0.09 s in
+        * all on the perfbench `relay_drain` trace, down from ~0.32 s
+        * while every checkpoint file forked `chmod` and `readlink`
+        * processes (see [[graft.io.LocalFs]]) — so throughput
         * scales with events-per-trigger until executor parallelism
         * saturates; 256 files kept the sf1 drain at 163-184k events/s
         * vs 52k at 32), while [[startContinuous]] resolves it to the
@@ -294,6 +296,7 @@ object CdcRelay {
     */
   def start(spark: SparkSession, rawCfg: RelayConfig,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     // A19 pre-flight: reject an invalid config with the full mismatch
     // list before any stream state is touched
     val cfg = rawCfg.validated

@@ -71,7 +71,8 @@ object CompactionStream {
     * overwrites its own partition (same contract as the other sinks).
     */
   def start(events: Dataset[Event], outDir: String,
-      chkDir: String): StreamingQuery =
+      chkDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(events.sparkSession)
     currentState(events).toDF().writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", chkDir)
@@ -85,4 +86,5 @@ object CompactionStream {
         ()
       }
       .start()
+  }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Streaming incremental dedup — the streaming twin of
@@ -64,6 +65,15 @@ object IncrementalDedupStream {
   private[graft] def hashParts(spark: SparkSession): Int =
     spark.conf.getOption("spark.graft.store.hashParts")
       .map(_.toInt).getOrElse(32)
+
+  /** The hash store's layout as written by [[processBatch]]; the probe
+    * reads with it, so no epoch runs a schema-inference job over the
+    * store's footers.
+    */
+  private val StoreSchema = StructType(Seq(
+    StructField("h", StringType),
+    StructField("batch_id", LongType),
+    StructField("hp", LongType)))
 
   private[streaming] def hpCol(key: org.apache.spark.sql.Column,
       nHp: Int): org.apache.spark.sql.Column =
@@ -171,7 +181,7 @@ object IncrementalDedupStream {
           val batchView = s"graft_incdedup_batch_md5_$suffix"
           val storeView = s"graft_incdedup_store_md5_$suffix"
           batchHashes.createOrReplaceTempView(batchView)
-          spark.read.parquet(storeDir)
+          spark.read.schema(StoreSchema).parquet(storeDir)
             // replay: own hashes excluded. Both predicates are
             // PartitionFilters — batch_id bounds the epoch tail, hp
             // prunes the listing to the batch's touched hash prefixes.
@@ -305,11 +315,13 @@ object IncrementalDedupStream {
     */
   def start(spark: SparkSession, docs: DataFrame, outDir: String,
       storeDir: String, chkDir: String,
-      compactEvery: Int = DefaultCompactEvery): StreamingQuery =
+      compactEvery: Int = DefaultCompactEvery): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     docs.writeStream
       .option("checkpointLocation", chkDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         processBatch(batch, batchId, outDir, storeDir, compactEvery)
       }
       .start()
+  }
 }

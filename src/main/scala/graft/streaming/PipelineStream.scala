@@ -365,6 +365,7 @@ object PipelineStream {
     */
   def start(spark: SparkSession, docs: DataFrame, sfDir: String,
       outDir: String, storeDir: String, chkDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     graft.plans.GraftExtensions.register(spark)
     val evalSet = TextQueries.passageHashes(
         graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 13 === 0),

@@ -80,6 +80,7 @@ object SketchStream {
     */
   def start(spark: SparkSession, docs: DataFrame, outDir: String,
       chkDir: String): StreamingQuery = {
+    graft.io.LocalFs.install(spark)
     import spark.implicits._
     docs.writeStream
       .option("checkpointLocation", chkDir)

@@ -428,4 +428,35 @@ class CdcRelaySpec extends AnyFunSuite {
       assert(added(_ => DatasetBridge.confClone(caller)) == 0)
     } finally spark.streams.removeListener(listener)
   }
+
+  test("a drain into a file: checkpoint forks no process for its checkpoint files") {
+    import graft.io.LocalFs
+    val root = Files.createTempDirectory("relay-forks").toString
+    val in = s"$root/in"; new java.io.File(in).mkdirs()
+    writeManyEvents(in, 40, 1700000000000000L)
+    val chk = new java.io.File(s"$root/chk").toURI.toString
+    val starts = ProcessStarts.during {
+      CdcRelay.start(spark, RelayConfig(in, s"$root/out", chk))
+        .awaitTermination()
+    }
+    assert(spark.read.parquet(s"$root/out").count() == 40)
+    val viaCheckpoint = starts.filter(ProcessStarts.hasFrame(_, "CheckpointFileManager"))
+    assert(viaCheckpoint.isEmpty,
+      s"${viaCheckpoint.size} process starts under a CheckpointFileManager")
+    // Spark's checkpoint checksums and Hadoop's .crc sidecars stay on
+    val state = new java.io.File(s"$root/chk/state/0/0").list().toSet
+    assert(state.contains("1.delta.crc"), state.mkString(","))
+    assert(state.contains(".1.delta.crc"), state.mkString(","))
+    // install is idempotent and keeps an explicit choice
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
+    LocalFs.install(spark)
+    assert(conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
+    val explicit = "org.apache.hadoop.fs.local.RawLocalFs"
+    conf.set(LocalFs.ImplKey, explicit)
+    try {
+      LocalFs.install(spark)
+      assert(conf.get(LocalFs.ImplKey) == explicit)
+    } finally conf.set(LocalFs.ImplKey, classOf[LocalFs].getName)
+  }
 }
