@@ -74,12 +74,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default 32 = the charter machine (local[32]); every committed
-    // closing-sweep artifact was produced with SPARK_GRAFT_CPUS=32, and
-    // a round-16 forgotten-env forensic (SCALING.md) showed the old
-    // default of 4 silently quarters the scan parallelism: sf1 CPU-bound
-    // queries read 3-5× "slower" with corpus/code/plans all unchanged
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // shuffle partitions default to the thread count (the benchmark
     // shape), but the LOWMEM tier raises them independently: per-task
     // aggregation state shrinks ∝ partitions, which is the knob a
@@ -87,18 +81,8 @@ object Bench {
     // not fewer cores). Measured at the sf10-docs decade under 2 GiB:
     // 8 threads × 8 partitions OOMs the pair stages nondeterministically,
     // 8 threads × 64 partitions completes (see SCALING.md round 17).
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // reclaim reliable-checkpoint files (Stage.fanout, dedup_clusters
-      // rounds) as soon as their frame is unreachable
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-bench",
+      shufflePartitions = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt))
     // Spill accounting: the low-memory runs (SCALING.md) must SHOW that
     // constrained heaps exercise the spill paths rather than silently
     // fitting in memory — total spill bytes ride the artifact.

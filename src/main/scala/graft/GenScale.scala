@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic sf-multiplier for the scaling study (SCALING.md): from
@@ -56,12 +56,7 @@ object GenScale {
     // "evs" replicates only the events table — the time-series decade
     // probes need 100× event history, nothing else
     val evsOnly = mode.contains("evs")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local("graft-genscale", shufflePartitions = Some(32))
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -21,16 +21,23 @@ object SparkEntry {
     * The reference's entire per-event dataflow (SURVEY.md §7.2): scan →
     * dispatch → subject/msg-id derivation → portable-encoded JSON envelope.
     */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Session.setup(spark)
     CdcQueries.envelope(spark, "/root/testdata/sf0.001")
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2; each sets up
+    * the session it is given ([[Session.setup]]) before it builds.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CdcQueries.queries ++
+    (CdcQueries.queries ++
       RelationalQueries.queries ++
       TextQueries.queries ++
       VectorQueries.queries ++
-      MultimodalQueries.queries
+      MultimodalQueries.queries).map { case (name, query) =>
+      name -> ((spark: SparkSession, sfDir: String) =>
+        query(Session.setup(spark), sfDir))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */

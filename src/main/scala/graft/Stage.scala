@@ -49,28 +49,19 @@ object Stage {
     * MEMORY_AND_DISK keeps the staged relation spill-safe when a 100 TB
     * corpus shard exceeds executor memory.
     */
-  def fanout(shared: DataFrame)(build: DataFrame => DataFrame): DataFrame = {
-    ensureCheckpointDir(shared.sparkSession)
-    val staged = shared.persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE the fan-out plan runs: the consumer stages are
-    // independent and get submitted concurrently, so a lazily-built
-    // cache would be raced — each stage recomputing the same partitions
-    // ("Block already exists" churn) and saving nothing
-    staged.queryExecution.toRdd.count()
-    val out = build(staged).persist(StorageLevel.MEMORY_AND_DISK)
-    // eager checkpoint: the count populates `out`'s cache (one
-    // evaluation of the fan-out joins), the checkpoint write job then
-    // replays that cache into reliable files
-    val pinned = out.checkpoint()
-    // blocking: lazy release leaves evicted-page/GC/cleaner debt that
-    // taxes every LATER query in the session (round-4 bench showed
-    // untouched queries running 2-8× slower downstream of staged ones);
-    // the pinned result is already on checkpoint files, so waiting for
-    // the block drop costs only the drop itself
-    out.unpersist(blocking = true)
-    staged.unpersist(blocking = true)
-    pinned
-  }
+  def fanout(shared: DataFrame)(build: DataFrame => DataFrame): DataFrame =
+    staging(shared) { persist =>
+      val staged = persist(shared)
+      // materialize BEFORE the fan-out plan runs: the consumer stages are
+      // independent and get submitted concurrently, so a lazily-built
+      // cache would be raced — each stage recomputing the same partitions
+      // ("Block already exists" churn) and saving nothing
+      staged.queryExecution.toRdd.count()
+      // eager checkpoint: its count populates the staged result's cache
+      // (one evaluation of the fan-out joins), its write job then
+      // replays that cache into reliable files
+      persist(build(staged)).checkpoint()
+    }
 
   /** Two-level [[fanout]]: stage `shared`, stage a relation `derive`d
     * from it, fan out over BOTH, checkpoint the slim result, release
@@ -83,18 +74,34 @@ object Stage {
     * only `build`'s slim output does.
     */
   def fanout2(shared: DataFrame)(derive: DataFrame => DataFrame)(
-      build: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+      build: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    staging(shared) { persist =>
+      val s1 = persist(shared)
+      s1.queryExecution.toRdd.count()
+      val s2 = persist(derive(s1))
+      s2.queryExecution.toRdd.count()
+      persist(build(s1, s2)).checkpoint()
+    }
+
+  /** Run `body` with a `persist` that stages a frame (MEMORY_AND_DISK),
+    * then release every frame it staged, latest first, whether `body`
+    * returns or throws.
+    *
+    * Blocking release: lazy release leaves evicted-page/GC/cleaner debt
+    * that taxes every LATER query in the session (round-4 bench showed
+    * untouched queries running 2-8× slower downstream of staged ones);
+    * the result is already on checkpoint files, so waiting for the
+    * block drop costs only the drop itself.
+    */
+  private def staging(shared: DataFrame)(
+      body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
     ensureCheckpointDir(shared.sparkSession)
-    val s1 = shared.persist(StorageLevel.MEMORY_AND_DISK)
-    s1.queryExecution.toRdd.count()
-    val s2 = derive(s1).persist(StorageLevel.MEMORY_AND_DISK)
-    s2.queryExecution.toRdd.count()
-    val out = build(s1, s2).persist(StorageLevel.MEMORY_AND_DISK)
-    val pinned = out.checkpoint()
-    out.unpersist(blocking = true)
-    s2.unpersist(blocking = true)
-    s1.unpersist(blocking = true)
-    pinned
+    var staged = List.empty[DataFrame]
+    try body { df =>
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      staged = p :: staged
+      p
+    } finally staged.foreach(_.unpersist(blocking = true))
   }
 
   /** Small-heap plan gate for the memory-tight execution shapes
@@ -157,8 +164,8 @@ object Stage {
     * so an executor loss never silently pins lineage to executor-local
     * storage the way `localCheckpoint()` would.
     *
-    * Checkpoint-file lifecycle: sessions graft owns (Verify, Bench,
-    * tests) set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
+    * Checkpoint-file lifecycle: sessions graft owns (`Session.local`)
+    * set `spark.cleaner.referenceTracking.cleanCheckpoints=true`
     * so each file set is deleted as soon as its frame becomes
     * unreachable; the local default dir additionally registers a
     * JVM-shutdown recursive delete so local runs can never leak the

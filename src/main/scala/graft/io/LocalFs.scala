@@ -3,11 +3,10 @@ package graft.io
 import java.net.URI
 import java.nio.file.{FileSystems, Files}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
-  FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
+  FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.SparkSession
 
 /** The `file:` FileContext (AbstractFileSystem) that Spark's streaming
   * checkpoint files go through: offset/commit logs, file-source logs and
@@ -18,28 +17,28 @@ import org.apache.spark.sql.SparkSession
   * its native library: `chmod` on every create and mkdir, and `readlink`
   * on every link-status probe (a rename probes its source and target).
   *
+  * Unlike Hadoop's `LocalFs` it verifies the `.crc` sidecar on every
+  * read: Spark's checkpoint file managers open with `open(Path)`, which
+  * `ChecksumFs` inherits from `FilterFs` and which reads the raw file.
+  *
   * Hadoop instantiates it reflectively with `(URI, Configuration)`; like
-  * Hadoop's `LocalFs` it ignores the URI.
+  * Hadoop's `LocalFs` it ignores the URI. `graft.Session.setup` routes
+  * a session's `file:` FileContexts here.
   */
 class LocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new LocalFs.RawFs(conf))
+    extends ChecksumFs(new LocalFs.RawFs(conf)) {
+
+  /** Through the checksummed `open(Path, bufferSize)`, as Hadoop's
+    * `FileSystem.open(Path)` already goes.
+    */
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object LocalFs {
 
   val ImplKey = "fs.AbstractFileSystem.file.impl"
-  private val HadoopDefault = "org.apache.hadoop.fs.local.LocalFs"
-
-  /** Route the SparkContext's `file:` FileContexts to [[LocalFs]]. Hadoop
-    * builds a FileContext from the configuration on every use, so this
-    * reaches every checkpoint file manager a stream creates afterwards.
-    * Idempotent; a value other than Hadoop's default is an explicit
-    * choice and is kept.
-    */
-  def install(spark: SparkSession): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    if (conf.get(ImplKey) == HadoopDefault)
-      conf.set(ImplKey, classOf[LocalFs].getName)
-  }
+  private[graft] val HadoopDefault = "org.apache.hadoop.fs.local.LocalFs"
 
   /** Hadoop's `RawLocalFs`, over [[ForkFreeRawLocalFileSystem]]. */
   private[io] class RawFs(conf: Configuration)

@@ -69,12 +69,11 @@ object CdcQueries {
       |FROM events ORDER BY event_id""".stripMargin
 
   /** [[envelope]] variant running the portable encode through the native
-    * Catalyst expressions (graft.plans.PortableU64Json, registered at
-    * runtime via GraftExtensions) instead of the when/concat column tree
+    * Catalyst expressions (graft.plans.PortableU64Json, registered by
+    * graft.Session.setup) instead of the when/concat column tree
     * — same bytes, one codegen'd branch per value. Shares the oracle.
     */
   def envelopeNative(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val ev = Tables.events(spark, sfDir)
     val cents = round(col("value") * 100).cast("long")
     val k = coalesce(get_json_object(col("props"), "$.k"), lit("null"))
@@ -575,8 +574,8 @@ object CdcQueries {
   /** Native direct-from-digest form (graft.plans.Md5Top60) —
     * bit-identical to conv(substring(md5(…),1,15),16,10)::long; at
     * ~80 synthesized fields per sampled row the hex/parse round-trips
-    * of the declarative form dominated this query's runtime. Callers
-    * must register GraftExtensions before analysis.
+    * of the declarative form dominated this query's runtime. Needs a
+    * session through graft.Session.setup before analysis.
     */
   private def h60(tag: String): Column =
     call_function("md5_top60",
@@ -604,7 +603,6 @@ object CdcQueries {
   private def u16Sql(tag: String): String = s"CAST(${h60Sql(tag)} % 65536 AS INT)"
 
   def fullEventJson(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val ev = Tables.events(spark, sfDir)
     val typeCode = (pmod(col("event_id"), lit(5)) + 1).cast("int")
     val body = cdcJsonBody(
@@ -700,7 +698,6 @@ object CdcQueries {
   // per header so every value is individually hash-checked.
   // -------------------------------------------------------------------
   def headers(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
     val ev = Tables.events(spark, sfDir)
     val typeCode = (pmod(col("event_id"), lit(5)) + 1).cast("int")
     val hm = headerMap(

@@ -39,7 +39,6 @@ object KMeans {
       dir: String,
       k: Int = 8,
       maxIters: Int = 10): Result = {
-    graft.plans.GraftExtensions.register(s)
     import s.implicits._
 
     val vecs = graft.Tables.embeddings(s, dir)

@@ -330,7 +330,6 @@ object MultimodalQueries {
   private val PhashRadius = 2
 
   def phashNearDup(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s) // dct_phash60
     val docs = documents(s, d)
     val anchors = docs.filter(col("doc_id") % 3 === 0)
       .select(col("doc_id").as("src_id"), col("text").as("src_text"))

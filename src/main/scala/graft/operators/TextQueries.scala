@@ -26,16 +26,6 @@ object TextQueries {
   /** Tokenize on single spaces (the corpus is space-separated words). */
   private def toks: Column = split(col("text"), " ")
 
-  /** All text queries read through here: registers the native
-    * expressions (md5_top60, char_ngrams, word_shingles) on the
-    * (possibly driver-owned, vanilla) session before any column tree
-    * referencing them is analyzed.
-    */
-  private[graft] def documents(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
-    graft.Tables.documents(s, d)
-  }
-
   /** 60-bit cross-engine hash of a string column (see object doc) —
     * the native direct-from-digest form ([[graft.plans.Md5Top60]]):
     * bit-identical to `conv(substring(md5(c),1,15),16,10)::long` but
@@ -226,7 +216,6 @@ object TextQueries {
     * when fewer than 3 tokens).
     */
   private def docShingles(s: SparkSession, d: String) = {
-    graft.plans.GraftExtensions.register(s)
     documents(s, d)
       .select(col("doc_id"),
         explode(call_function("word_shingles", col("text"), lit(3), lit(false)))
@@ -286,7 +275,6 @@ object TextQueries {
     // multiset, so signatures are unchanged; matching on the 60-bit
     // hash equals matching shingles modulo collisions, which the
     // oracle's string-equality join cross-checks.)
-    graft.plans.GraftExtensions.register(s)
     val hashedRaw = documents(s, d)
       .select(col("doc_id"),
         explode(call_function("word_shingles", col("text"), lit(3), lit(true)))
@@ -376,7 +364,6 @@ object TextQueries {
   // and hashed exactly once.
   // -------------------------------------------------------------------
   def minhashCalibration(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val hashedRaw = documents(s, d)
       .select(col("doc_id"),
         explode(call_function("word_shingles", col("text"), lit(3), lit(true)))
@@ -742,7 +729,6 @@ object TextQueries {
     // neardupPairs flat-join shape: per-doc gram arrays grow with doc
     // length and an 8 MB array cell is an executor-memory hazard the
     // flat relation doesn't have.
-    graft.plans.GraftExtensions.register(s)
     val docgr = docGramBlocks(g8Hashes(s, d), doc4Arrays(s, d))
     // stage docgr (|docs| rows): a broadcast self-join cannot reuse the
     // build side's exchange, so without staging the whole gram pipeline
@@ -900,7 +886,6 @@ object TextQueries {
     // character of the corpus; this shape keeps profile scoring inside
     // whole-stage codegen with a map-side partial agg (shuffled bytes ~
     // |docs|, not |bigrams|)
-    graft.plans.GraftExtensions.register(s)
     documents(s, d)
       .select(col("doc_id"), col("lang"),
         explode(call_function("char_ngrams", col("text"), lit(2), lit(false)))
@@ -1295,7 +1280,6 @@ object TextQueries {
       1, 15), 16, 10).cast("long"), lit(mod))
 
   def trainPipeline(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val docs = documents(s, d)
     val isEval = col("doc_id") % 13 === 0
     val base0 = docFlags(docs).select(col("doc_id"), col("source"),
@@ -1536,7 +1520,6 @@ object TextQueries {
   // (asserted in BloomPrefilterSpec).
   // -------------------------------------------------------------------
   def bloomPrefilter(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     documents(s, d).createOrReplaceTempView("graft_bloom_docs")
     // 10^6-item estimate ⇒ ~1 MB of bits: generous at test SF, and the
     // knob a deployment sizes from its corpus row-count statistics
@@ -1612,7 +1595,6 @@ object TextQueries {
     */
   private[graft] def incrementalNearSplit(s: SparkSession, d: String,
       corpusPred: Column, batchPred: Column): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     var tPhase = System.nanoTime()
     def phase(tag: String): Unit = {
       if (sys.env.contains("GRAFT_PHASE_LOG")) {
@@ -1787,7 +1769,6 @@ object TextQueries {
   // re-runs and retries assemble byte-identical batches.
   // -------------------------------------------------------------------
   def trainAssemble(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val docs = docFlags(documents(s, d))
       .filter(col("pass_lang") && col("pass_quality"))
       .select(col("doc_id"), col("source"), col("text_md5"), col("n_tokens"))
@@ -2096,7 +2077,6 @@ object TextQueries {
   // never the corpus text.
   // -------------------------------------------------------------------
   def repetition(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val dupFrac = (col("n_bigrams") - col("n_distinct")).cast("double") /
       col("n_bigrams")
     val topFrac = col("top_c").cast("double") / col("n_bigrams")
@@ -2320,7 +2300,6 @@ object TextQueries {
     // on idle cores. Under a small heap the co-resident staged mass
     // inverts the trade (the retrieval composite's measured lesson) —
     // same Stage.smallHeap gate, serial there.
-    graft.plans.GraftExtensions.register(s)
     graft.Stage.ensureCheckpointDir(s)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -2630,7 +2609,6 @@ object TextQueries {
     * composites (dedup_agreement) can consume the relation directly.
     */
   private[operators] def containmentCore(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val grams = documents(s, d)
       .select(col("doc_id"),
         explode(call_function("char_ngrams", col("text"), lit(4), lit(true)))
@@ -2769,7 +2747,6 @@ object TextQueries {
     * relation directly.
     */
   private[operators] def rareGramCore(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val posts = g8Hashes(s, d).select(col("doc_id"), col("gh8").as("gh"))
     val cand = graft.Stage.fanout(posts)(rareCandBuild)
     // exact verification over candidate docs ONLY: the semi-join keeps
@@ -2919,7 +2896,6 @@ object TextQueries {
     // its last consumer has materialized. Output rows are identical to
     // the r16 composition (CrossOperatorSpec pins the partition).
     import org.apache.spark.storage.StorageLevel
-    graft.plans.GraftExtensions.register(s)
     graft.Stage.ensureCheckpointDir(s)
     var t0 = System.nanoTime()
     def phase(tag: String): Unit = {
@@ -3373,7 +3349,6 @@ object TextQueries {
   // ordering.
   // -------------------------------------------------------------------
   def sourceMix(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     val perDoc = documents(s, d)
       .select(col("source"), col("lang"), col("doc_id"),
         explode(call_function("char_ngrams", col("text"), lit(2), lit(false)))

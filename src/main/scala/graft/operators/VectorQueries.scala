@@ -53,15 +53,6 @@ object VectorQueries {
     */
   private val IvfSeeds = 16
 
-  /** All vector queries read through here: registers the native
-    * array_dot expression on the (possibly driver-owned, vanilla)
-    * session before any column tree referencing it is analyzed.
-    */
-  private[graft] def embeddings(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
-    graft.Tables.embeddings(s, d)
-  }
-
   /** Dot product of two embedding columns via the fused native
     * [[graft.plans.ArrayDot]] loop — one O(1)-size codegen block per
     * dot instead of 64 inlined terms (which blew janino's 64 KB method

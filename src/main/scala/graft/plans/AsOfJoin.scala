@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -137,7 +137,6 @@ object AsOfJoinOps {
                leftTimeCol: String, rightTimeCol: String,
                rightTieCols: Seq[String] = Nil): DataFrame = {
     val spark = leftDf.sparkSession
-    register(spark)
     val lPlan = leftDf.queryExecution.analyzed
     val rPlan = rightDf.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =
@@ -149,12 +148,5 @@ object AsOfJoinOps {
       attr(lPlan, leftTimeCol), attr(rPlan, rightTimeCol),
       rightTieCols.map(attr(rPlan, _)))
     org.apache.spark.sql.graftbridge.DatasetBridge.ofRows(spark, plan)
-  }
-
-  /** Idempotently add the planner strategy to a live session. */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
   }
 }

@@ -1,18 +1,20 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-/** Session extension registering the engine's native expressions as SQL
-  * functions. Two entry points:
+/** The engine's native expressions as SQL functions ([[GraftExtensions.definitions]])
+  * and the as-of join planner strategy. Two entry points over the same
+  * definitions:
   *
-  *   - launch-time: `--conf spark.sql.extensions=graft.plans.GraftExtensions`
-  *   - runtime: `GraftExtensions.register(spark)` on an existing session
-  *     (used by the query inventory so it works under any driver-owned
-  *     session).
+  *   - `graft.Session.setup(spark)` on a live session, which every public
+  *     entry point (`SparkEntry.entry`, each `SparkEntry.queries` value,
+  *     each stream `start`) calls, so the engine works under a session
+  *     it did not build;
+  *   - this class at launch time:
+  *     `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -110,12 +112,4 @@ object GraftExtensions {
         classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
       two("sorted_intersect_count", SortedIntersectCount(_, _)))
   )
-
-  /** Idempotently register the functions on a live session. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    definitions.foreach { case (name, info, builder) =>
-      registry.registerFunction(FunctionIdentifier(name), info, builder)
-    }
-  }
 }

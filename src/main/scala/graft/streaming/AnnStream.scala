@@ -112,8 +112,7 @@ object AnnStream {
   def start(spark: SparkSession, queries: DataFrame, sfDir: String,
             outDir: String, chkDir: String, k: Int = 5,
             nprobe: Int = DefaultNprobe): StreamingQuery = {
-    graft.io.LocalFs.install(spark)
-    graft.plans.GraftExtensions.register(spark)
+    graft.Session.setup(spark)
     val indexed = nprobe > 0
     // On the indexed path the corpus carries its trained cell id; the
     // one-time Lloyd training (bounded driver state, zero-exchange

@@ -112,7 +112,7 @@ object AttributionStream {
     * partition). */
   def start(events: Dataset[Event], outDir: String,
       chkDir: String): StreamingQuery = {
-    graft.io.LocalFs.install(events.sparkSession)
+    graft.Session.setup(events.sparkSession)
     attributions(events).toDF().writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", chkDir)

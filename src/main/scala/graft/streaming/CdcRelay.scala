@@ -296,7 +296,7 @@ object CdcRelay {
     */
   def start(spark: SparkSession, rawCfg: RelayConfig,
             trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    graft.io.LocalFs.install(spark)
+    graft.Session.setup(spark)
     // A19 pre-flight: reject an invalid config with the full mismatch
     // list before any stream state is touched
     val cfg = rawCfg.validated

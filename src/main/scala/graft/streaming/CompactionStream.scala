@@ -72,7 +72,7 @@ object CompactionStream {
     */
   def start(events: Dataset[Event], outDir: String,
       chkDir: String): StreamingQuery = {
-    graft.io.LocalFs.install(events.sparkSession)
+    graft.Session.setup(events.sparkSession)
     currentState(events).toDF().writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", chkDir)

@@ -28,9 +28,7 @@ object DecontaminateStream {
     */
   def start(spark: SparkSession, docs: DataFrame, sfDir: String,
       outDir: String, chkDir: String): StreamingQuery = {
-    graft.io.LocalFs.install(spark)
-    // passage hashing uses the native md5_top60 expression
-    graft.plans.GraftExtensions.register(spark)
+    graft.Session.setup(spark)
     val evalSet = graft.operators.TextQueries
       .passageHashes(
         graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 13 === 0),

@@ -167,7 +167,6 @@ object IncrementalDedupStream {
         // estimate is a fixed 1M (a ~1.2 MB bloom): micro-batches are
         // trigger-bounded, and an over-large batch only raises the
         // false-positive rate (less pruning), never correctness.
-        graft.plans.GraftExtensions.register(spark)
         // the slim batch-hash scan (NO window, no persist — a persisted
         // hashed0 was measured 1241 → 753 rows/s at sf0.1: the extra
         // materialization job + cache churn cost more per epoch than
@@ -316,7 +315,7 @@ object IncrementalDedupStream {
   def start(spark: SparkSession, docs: DataFrame, outDir: String,
       storeDir: String, chkDir: String,
       compactEvery: Int = DefaultCompactEvery): StreamingQuery = {
-    graft.io.LocalFs.install(spark)
+    graft.Session.setup(spark)
     docs.writeStream
       .option("checkpointLocation", chkDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

@@ -24,7 +24,7 @@ object MediaFeatureStream {
     */
   def start(media: Dataset[graft.operators.MultimodalQueries.MediaIn],
       outDir: String, chkDir: String): StreamingQuery = {
-    graft.io.LocalFs.install(media.sparkSession)
+    graft.Session.setup(media.sparkSession)
     import media.sparkSession.implicits._
     media
       .mapPartitions(_.map(graft.operators.MultimodalQueries.decodeStub))

@@ -167,7 +167,6 @@ object PipelineStream {
       compactEvery: Int = IncrementalDedupStream.DefaultCompactEvery): Unit = {
     val spark = batch.sparkSession
     if (batch.isEmpty) return // idle trigger: no writes, no store epochs
-    graft.plans.GraftExtensions.register(spark) // bloom agg/probe fns
     val isEval = col("doc_id") % 13 === 0
     val flagged = TextQueries.docFlags(batch)
       .withColumn("curated",
@@ -365,8 +364,7 @@ object PipelineStream {
     */
   def start(spark: SparkSession, docs: DataFrame, sfDir: String,
       outDir: String, storeDir: String, chkDir: String): StreamingQuery = {
-    graft.io.LocalFs.install(spark)
-    graft.plans.GraftExtensions.register(spark)
+    graft.Session.setup(spark)
     val evalSet = TextQueries.passageHashes(
         graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 13 === 0),
         stride = 1)

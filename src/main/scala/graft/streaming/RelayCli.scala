@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** CLI front-end with the REFERENCE's flag surface (config.go:164-371)
@@ -137,12 +136,7 @@ object RelayCli {
       }
     parsed.ignored.foreach(f =>
       System.err.println(s"[relay-cli] ignoring broker-only flag --$f"))
-    val builder = SparkSession.builder()
-      .config("spark.sql.session.timeZone", "UTC")
-    // spark-submit provides spark.master; a bare `sbt runMain` doesn't
-    if (!sys.props.contains("spark.master"))
-      builder.master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-    val spark = builder.getOrCreate()
+    val spark = graft.Session.local("relay-cli")
     val query =
       if (parsed.drain) CdcRelay.start(spark, parsed.config,
         Trigger.AvailableNow())

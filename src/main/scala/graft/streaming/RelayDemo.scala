@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** Runnable example: relay the sf0.001 events table through the CDC
   * streaming pipeline into a parquet "stream" sink, twice, to show
@@ -11,13 +10,7 @@ import org.apache.spark.sql.SparkSession
   */
 object RelayDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("relay-demo", cores = 4)
 
     val root = Files.createTempDirectory("relay-demo").toString
     val in = s"$root/in"

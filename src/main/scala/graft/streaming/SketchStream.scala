@@ -80,7 +80,7 @@ object SketchStream {
     */
   def start(spark: SparkSession, docs: DataFrame, outDir: String,
       chkDir: String): StreamingQuery = {
-    graft.io.LocalFs.install(spark)
+    graft.Session.setup(spark)
     import spark.implicits._
     docs.writeStream
       .option("checkpointLocation", chkDir)

@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -72,14 +71,8 @@ object AnnFloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val files = args.drop(1).headOption.map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("ann-floor-probe",
+      shufflePartitions = Some(sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32").toInt))
     val root = Files.createTempDirectory("ann-floor").toString
     // the StreamBench trickle shape: 64 queries, 8 per micro-batch
     val qs = graft.Tables.embeddings(spark, sfDir)
@@ -115,7 +108,6 @@ object AnnFloorProbe {
     // the serving plan without the file sink: same corpus/index build,
     // same answer() plan, executed via a count action
     run("serve_nowrite") { (_, chk) =>
-      graft.plans.GraftExtensions.register(spark)
       val (cents, base) = {
         val (c, a) = graft.operators.VectorQueries.semanticModel(spark, sfDir)
         val lbl = graft.Tables.embeddings(spark, sfDir)

@@ -31,7 +31,7 @@ object BlockingDiag {
     * bucket + two 8-gram-hash minima (TextQueries.ngramJaccard).
     */
   def jaccardBlocks(s: SparkSession, d: String): DataFrame = {
-    val docs = TextQueries.documents(s, d)
+    val docs = graft.Tables.documents(s, d)
     val blocks = docs
       .select(col("doc_id"),
         explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
@@ -53,7 +53,7 @@ object BlockingDiag {
     * (TextQueries.containment).
     */
   def containmentBlocks(s: SparkSession, d: String): DataFrame = {
-    TextQueries.documents(s, d)
+    graft.Tables.documents(s, d)
       .select(col("doc_id"),
         explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
           .as("g8"))
@@ -76,7 +76,7 @@ object BlockingDiag {
     * exact/blocking-dedup's territory by design).
     */
   def rareGramBlocks(s: SparkSession, d: String): DataFrame =
-    TextQueries.documents(s, d)
+    graft.Tables.documents(s, d)
       .select(col("doc_id"),
         explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
           .as("g8"))
@@ -91,7 +91,7 @@ object BlockingDiag {
     * (SCALING.md §Vector LSH), or the IVF route.
     */
   def vecLshBlocks(s: SparkSession, d: String): DataFrame =
-    graft.operators.VectorQueries.embeddings(s, d)
+    graft.Tables.embeddings(s, d)
       .select(col("vec_id").as("doc_id"),
         graft.operators.VectorQueries.bucket.cast("string").as("block"))
 
@@ -125,7 +125,8 @@ object BlockingDiag {
     * number, not a hope. Enabled via SPARK_GRAFT_SEMANTIC_RECALL=1.
     */
   def semanticRecall(s: SparkSession, d: String, theta: Double): Map[String, Long] = {
-    import graft.operators.VectorQueries.{embeddings, semanticAssigned}
+    import graft.Tables.embeddings
+    import graft.operators.VectorQueries.semanticAssigned
     val a = semanticAssigned(s, d)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
     val x = a.select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
@@ -226,13 +227,7 @@ object BlockingDiag {
 
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("blocking-diag")
     val fields = Seq("n_docs", "n_blocks", "max_block", "cand_pairs",
       "dropped_blocks", "dropped_pairs")
     // SPARK_GRAFT_FAMILIES=vec_lsh,vec_lsh_banded — restrict to the

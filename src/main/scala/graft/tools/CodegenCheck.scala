@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Hard-fail codegen audit: runs each named query (default: all) with
   * `spark.sql.codegen.fallback=false` (whole-stage codegen compile
@@ -15,14 +14,9 @@ import org.apache.spark.sql.SparkSession
   */
 object CodegenCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.codegen.fallback", "false")
-      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("codegen-check", cores = 8)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names =

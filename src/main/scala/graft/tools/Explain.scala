@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Dump formatted physical plans for named queries (plan audit aid):
   *   sbt "runMain graft.tools.Explain dedup_neardup_pairs vec_cosine_neardup"
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.local("explain", cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val names = if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted

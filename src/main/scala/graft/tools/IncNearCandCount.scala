@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off diagnostic: candidate-pair volume of the registered
@@ -10,14 +9,7 @@ import org.apache.spark.sql.functions._
 object IncNearCandCount {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftExtensions.register(spark)
+    val spark = graft.Session.local("inc-near-cand-count", shufflePartitions = Some(32))
     val docs = graft.Tables.documents(spark, sfDir)
     def g8(df: org.apache.spark.sql.DataFrame) = df
       .select(col("doc_id"),

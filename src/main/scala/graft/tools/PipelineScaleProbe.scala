@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -36,15 +36,7 @@ object PipelineScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("testdata_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("pipeline-scale-probe")
     val root = Files.createTempDirectory("pipe-probe").toString
     val docs = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("source"), col("text"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.CdcRelay
 import graft.streaming.CdcRelay.RelayConfig
@@ -48,14 +47,7 @@ object RelayLatencyProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nFiles = args.lift(1).map(_.toInt).getOrElse(40)
     val gapMs = args.lift(2).map(_.toLong).getOrElse(250L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("relay-latency-probe")
     val root = Files.createTempDirectory("relay-latency").toString
 
     // Pre-stage the event corpus ONCE as ~4096-event files in event-time

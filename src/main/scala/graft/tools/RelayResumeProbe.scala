@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** At-scale kill/resume measurement of the relay's delivery contract.
   *
@@ -29,15 +28,7 @@ object RelayResumeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/repo/testdata_sf1")
     val killFrac = args.lift(1).map(_.toDouble).getOrElse(0.5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("relay-resume-probe")
 
     val root = Files.createTempDirectory("relay-resume").toString
     val in = s"$root/in"

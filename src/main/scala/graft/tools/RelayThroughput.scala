@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end relay throughput measurement.
   *
@@ -22,15 +21,7 @@ import org.apache.spark.sql.SparkSession
 object RelayThroughput {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("relay-throughput")
 
     val root = Files.createTempDirectory("relay-tput").toString
     val in = s"$root/in"

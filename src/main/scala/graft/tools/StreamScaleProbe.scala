@@ -53,14 +53,7 @@ object StreamScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("testdata_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local("stream-scale-probe")
     val root = Files.createTempDirectory("stream-probe").toString
     val (docsDir, docSchema, nDocs) = stageDocs(spark, sfDir, root)
 

@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ArraySumAggSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    graft.plans.GraftExtensions.register(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   test("matches the posexplode scalar-sum result on multi-partition input") {
     import spark.implicits._

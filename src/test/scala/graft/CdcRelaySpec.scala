@@ -269,6 +269,34 @@ class CdcRelaySpec extends AnyFunSuite {
     assert(commits >= 3, s"expected >=3 epochs, got $commits")
   }
 
+  test("a restart over a corrupted offset-log entry fails its checksum") {
+    val root = Files.createTempDirectory("relay-crc").toString
+    val in = s"$root/in"; new java.io.File(in).mkdirs()
+    val cfg = RelayConfig(in, s"$root/out", s"$root/chk", maxFilesPerTrigger = Some(1))
+    // the last file's event is the earliest, so the watermark stops
+    // moving and no no-data epoch follows: the offset log ends at the
+    // third data epoch
+    Seq(10L, 20L, 5L).zipWithIndex.foreach { case (sec, i) =>
+      writeEvents(in, s"b$i.parquet",
+        Seq((i.toLong, 1700000000000000L + sec * 1000000L, 1L, "view")))
+    }
+    CdcRelay.start(spark, cfg).awaitTermination()
+    // one digit of the last entry's source offset, the JSON still valid
+    val offsets = new java.io.File(s"$root/chk/offsets")
+    val last = offsets.listFiles().map(_.getName)
+      .filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    assert(new java.io.File(offsets, s".$last.crc").exists)
+    val entry = new java.io.File(offsets, last).toPath
+    val text = Files.readString(entry)
+    assert(text.contains("\"logOffset\":2"), text)
+    Files.writeString(entry, text.replace("\"logOffset\":2", "\"logOffset\":1"))
+    val e = intercept[Exception] {
+      CdcRelay.start(spark, cfg).awaitTermination()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e)
+  }
+
   test("restart with no new input produces no new output") {
     val root = Files.createTempDirectory("relay2").toString
     val in = s"$root/in"; new java.io.File(in).mkdirs()
@@ -447,15 +475,15 @@ class CdcRelaySpec extends AnyFunSuite {
     val state = new java.io.File(s"$root/chk/state/0/0").list().toSet
     assert(state.contains("1.delta.crc"), state.mkString(","))
     assert(state.contains(".1.delta.crc"), state.mkString(","))
-    // install is idempotent and keeps an explicit choice
+    // set-up is idempotent and keeps an explicit choice
     val conf = spark.sparkContext.hadoopConfiguration
     assert(conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
-    LocalFs.install(spark)
+    Session.setup(spark)
     assert(conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
     val explicit = "org.apache.hadoop.fs.local.RawLocalFs"
     conf.set(LocalFs.ImplKey, explicit)
     try {
-      LocalFs.install(spark)
+      Session.setup(spark)
       assert(conf.get(LocalFs.ImplKey) == explicit)
     } finally conf.set(LocalFs.ImplKey, classOf[LocalFs].getName)
   }

@@ -66,7 +66,6 @@ class CountMinSpec extends AnyFunSuite {
 
   test("estimateCol is bit-identical to the host-side estimate, with no UDF") {
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark) // estimateCol needs md5_top60
     val terms = words.zipWithIndex.flatMap { case (w, i) =>
       Seq.fill(i + 2)(w)
     }

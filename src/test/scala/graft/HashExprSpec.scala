@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class HashExprSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    graft.plans.GraftExtensions.register(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   test("md5_top60 equals the conv/substring/md5 form on varied inputs") {
     import spark.implicits._

@@ -134,7 +134,6 @@ class PipelineStreamSpec extends AnyFunSuite {
   }
 
   test("stage semantics and replay idempotence on a crafted corpus") {
-    graft.plans.GraftExtensions.register(spark)
     val root = Files.createTempDirectory("pipe-replay").toString
     val out = s"$root/out"; val store = s"$root/store"
 
@@ -212,7 +211,6 @@ class PipelineStreamSpec extends AnyFunSuite {
 
   test("shard-store sum compaction keeps the packing fold equal to one " +
       "global window, including across a compacting-epoch replay") {
-    graft.plans.GraftExtensions.register(spark)
     val root = Files.createTempDirectory("pipe-sumfold").toString
     val out = s"$root/out"; val store = s"$root/store"
 

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.CdcFunctions
-import graft.plans.GraftExtensions
 
 /** The native Catalyst expressions must agree with the when/concat
   * column form and the scalar encoder across the 2^53 boundary, survive
@@ -11,11 +10,7 @@ import graft.plans.GraftExtensions
   */
 class PortableExpressionSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    GraftExtensions.register(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   private val boundary = Seq(0L, 1L, 9007199254740990L, 9007199254740991L,
     9007199254740992L, Long.MaxValue)

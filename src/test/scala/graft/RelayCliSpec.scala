@@ -109,11 +109,14 @@ class RelayCliSpec extends AnyFunSuite {
         Row(id, new java.sql.Timestamp((base + id * 1000000L) / 1000), id,
           "view", 1.0, """{"k": 1}""")
       }, CdcRelay.inputSchema)
+    val confBefore = spark.conf.getAll
     RelayCli.main(Array("--cluster-id", "1",
       "--input-dir", in, "--output-dir", s"$root/out",
       "--checkpoint-dir", s"$root/chk", "--drain",
       "--nats-url", "nats://ignored:4222"))
     assert(spark.read.parquet(s"$root/out").count() == 2)
+    // main ran in this session, and rewrote none of its confs
+    assert(spark.conf.getAll == confBefore)
   }
 
   test("--timestamp-last bounds relayed events with a strict >") {

@@ -15,7 +15,6 @@ class SortedIntersectCountSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
 
   test("matches size(array_intersect) over sorted distinct arrays") {
-    graft.plans.GraftExtensions.register(spark)
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._

@@ -6,13 +6,5 @@ import org.apache.spark.sql.SparkSession
   * session per suite costs ~5s each).
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // reclaim reliable-checkpoint files (Stage.fanout) once unreachable
-    .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local("graft-test", cores = 4)
 }

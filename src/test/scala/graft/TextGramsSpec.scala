@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TextGramsSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = SparkTestSession.spark
-    graft.plans.GraftExtensions.register(s)
-    s
-  }
+  private lazy val spark = SparkTestSession.spark
 
   // seeded corpus-like strings plus adversarial shapes: empty, single
   // char, repeated/multiple spaces, unicode (multi-byte code points)

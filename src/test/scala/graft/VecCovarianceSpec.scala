@@ -112,7 +112,6 @@ class VecCovarianceSpec extends AnyFunSuite {
     // first-cut int64 path refused to run (and a wrapping path would be
     // silently wrong). 3e9 micro ≈ a |x|≈3000 component; each product
     // 9e18 ≈ Long.Max, 40 rows ≈ 3.6e20 ≫ Long.Max.
-    graft.plans.GraftExtensions.register(spark)
     val rows = 40
     val v = 3000000000L // 3e9: v*v = 9e18 < Long.Max = 9.223e18
     val df = spark.range(rows).selectExpr(
@@ -139,7 +138,6 @@ class VecCovarianceSpec extends AnyFunSuite {
   }
 
   test("array_outer_tri: codegen == interpreted == plain Scala; loud edges") {
-    graft.plans.GraftExtensions.register(spark)
     val in = Array(2L, -3L, 5L)
     val expected = (for (i <- in.indices; j <- i until in.length)
       yield in(i) * in(j)).toSeq
