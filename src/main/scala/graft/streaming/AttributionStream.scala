@@ -117,13 +117,7 @@ object AttributionStream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", chkDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.lit
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
+        EpochStore.overwrite(batch, outDir, batchId)
       }
       .start()
   }

@@ -47,18 +47,13 @@ object DecontaminateStream {
         // EVERY doc in the batch gets a verdict row: a sub-8-token doc
         // has no passages to test, so it reports (0, 0, clean) rather
         // than silently vanishing from a report consumers gate on
-        batch.select(col("doc_id")).distinct()
+        EpochStore.overwrite(batch.select(col("doc_id")).distinct()
           .join(perDoc, Seq("doc_id"), "left")
           .select(col("doc_id"),
             coalesce(col("n_passages"), lit(0L)).as("n_passages"),
             coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-            (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
+            (coalesce(col("n_hits"), lit(0L)) > 0).as("contaminated")),
+          outDir, batchId)
       }
       .start()
     catch {

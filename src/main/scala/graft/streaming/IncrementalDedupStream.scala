@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Streaming incremental dedup — the streaming twin of
@@ -13,35 +13,22 @@ import org.apache.spark.storage.StorageLevel
   * then appends the survivors' hashes to the seen-set store so later
   * batches dedup against them.
   *
-  * State is a parquet hash store partitioned by (`batch_id`,
-  * `hp = pmod(xxhash64(h), N)`) — hashes only, never text, so at 100 TB
-  * the store is ~1% of corpus bytes and the per-epoch anti-join
-  * shuffles nothing wider than (id, hash). The hash-prefix column lets
-  * a probe prune the store LISTING to the batch's touched prefixes
-  * (PartitionFilters), and the batch-keyed bloom prunes the surviving
-  * rows at the scan before any join exchange.
-  * Replay safety: an epoch reads only partitions with `batch_id` <
-  * its own (partition-pruned), and both writes are dynamic partition
-  * overwrites of the epoch's own partition — a replayed batch
-  * recomputes identical survivors and overwrites itself, the
-  * relay/AnnStream idempotence contract.
+  * State is an [[EpochStore]] Set of content hashes — hashes only,
+  * never text, so at 100 TB the store is ~1% of corpus bytes and the
+  * per-epoch anti-join shuffles nothing wider than (id, hash). Each
+  * epoch probes the store below its own id (hash-prefix and bloom
+  * pruned), writes its survivors to `outDir` and their hashes to the
+  * store, both as overwrites of the epoch's own partition, so a
+  * replayed batch recomputes identical survivors and overwrites
+  * itself (the relay/AnnStream idempotence contract). The store
+  * compacts every `compactEvery` epochs ([[EpochStore.compact]]);
+  * StreamScaleProbe measured 32 part files per epoch uncompacted,
+  * unbounded listing growth at 100 TB.
   *
   * Semantics match the batch operators (NullSafetySpec): within a
   * batch the smallest doc_id per hash is canonical; a NULL-text row
   * never equals any stored hash, so it is always novel (left-anti /
   * NOT EXISTS, never NOT IN), and NULL hashes stay out of the store.
-  *
-  * The store self-compacts every `compactEvery` epochs (StreamScaleProbe
-  * measured 32 part files per epoch — unbounded partition growth is the
-  * long-run listing cost at 100 TB): the pending per-epoch partitions
-  * merge into a generation partition `batch_id = -B` covering the base
-  * epochs since the previous generation (a TIERED chain — see
-  * [[compactStore]]; each compaction is O(compactEvery · batch), never
-  * O(history)). Crash safety needs no transaction because the store
-  * is a SET under left-anti probing — a generation's inputs are deleted
-  * only by a LATER batch (whose existence proves batch B committed), so
-  * the worst crash leaves duplicate hashes across a generation and its
-  * not-yet-deleted inputs, which cannot change any anti-join result.
   */
 object IncrementalDedupStream {
 
@@ -50,73 +37,8 @@ object IncrementalDedupStream {
     */
   val DefaultCompactEvery = 16
 
-  /** Hash-prefix partition fan-out of the parquet hash stores (VERDICT
-    * r20 #2, guide §6/§2.3): every store write carries `hp =
-    * pmod(xxhash64(key), N)` as a second partition column, and every
-    * probe filters the scan to the batch's touched prefixes — a
-    * PartitionFilter, so pruning happens at file listing, before any
-    * I/O. The prune is batch-size-dependent: a trickle batch touching
-    * k ≪ N prefixes reads k/N of the store; a bench-scale batch
-    * (|batch| ≫ N) touches every prefix and the filter keeps the scan
-    * unchanged. N trades pruning granularity against per-epoch file
-    * count (each epoch writes ≤ N files after the hp repartition);
-    * 32 keeps steady-state store files at 1 generation × 32 + tail.
-    */
-  private[graft] def hashParts(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.store.hashParts")
-      .map(_.toInt).getOrElse(32)
-
-  /** The hash store's layout as written by [[processBatch]]; the probe
-    * reads with it, so no epoch runs a schema-inference job over the
-    * store's footers.
-    */
-  private val StoreSchema = StructType(Seq(
-    StructField("h", StringType),
-    StructField("batch_id", LongType),
-    StructField("hp", LongType)))
-
-  private[streaming] def hpCol(key: org.apache.spark.sql.Column,
-      nHp: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(key), lit(nHp.toLong))
-
-  /** The batch's touched hash prefixes — bounded at `nHp` values, the
-    * same bounded-collect contract as KMeans' k-row driver state. Runs
-    * over the caller's (persisted) slim key relation, so this collect
-    * doubles as the cache-materialization barrier for the probe that
-    * follows.
-    */
-  private[streaming] def touchedPrefixes(keys: DataFrame, keyCol: String,
-      nHp: Int): Seq[Long] =
-    keys.filter(col(keyCol).isNotNull)
-      .select(hpCol(col(keyCol), nHp).as("hp"))
-      .distinct().collect().toSeq.map(_.getLong(0))
-
-  /** Per-call-unique temp view suffix (VERDICT r20 #9 / ADVICE): fixed
-    * session-global view names collide when two streams of the same
-    * shape share one SparkSession — epoch A's SQL could resolve epoch
-    * B's batch view and prune with the wrong bloom (false negatives).
-    */
-  private[streaming] val viewSeq =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** Plan-audit hook: with GRAFT_EXPLAIN_STORE set, the FIRST
-    * store-probing epoch in the JVM prints its probe plan (formatted)
-    * so the committed `plans/` dumps show the real epoch plan — the
-    * bloom filter at the store scan, the hp/batch_id PartitionFilters,
-    * and no full-store Exchange. No effect unless the env var is set.
-    */
-  private[streaming] val explained =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private[streaming] def maybeExplain(tag: String, df: DataFrame): Unit = {
-    // one dump per probe KIND (the part of the tag before the comma),
-    // not per epoch — later epochs share the plan shape
-    val kind = tag.takeWhile(_ != ',')
-    if (sys.env.contains("GRAFT_EXPLAIN_STORE") && explained.add(kind)) {
-      println(s"[explain-store] $tag")
-      df.explain("formatted")
-    }
-  }
+  /** A hash store's stored column: the content hash (md5 hex). */
+  private[streaming] val HashSchema = StructType(Seq(StructField("h", StringType)))
 
   /** One epoch: dedup `batch` against the store below `batchId`, write
     * survivors to `outDir` and their hashes to `storeDir` (both
@@ -135,178 +57,30 @@ object IncrementalDedupStream {
       // equals null in dedup semantics
       .filter(col("content_md5").isNull || col("doc_id") === col("mn"))
       .drop("mn")
-    // Probe through the Hadoop FileSystem API, not java.io.File — the
-    // store lives wherever the checkpoint does (HDFS/S3 on a cluster,
-    // file: locally), and a driver-local listFiles() would return null
-    // forever there, silently degrading dedup to within-batch only.
-    val hasStore = {
-      val path = new org.apache.hadoop.fs.Path(storeDir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(path) && Option(
-        fs.globStatus(new org.apache.hadoop.fs.Path(path, "batch_id=*")))
-        .exists(_.nonEmpty)
+    val store = new EpochStore(spark, storeDir, HashSchema, EpochStore.Set("h"))
+    // the slim batch-hash scan (NO window, no persist — a persisted
+    // hashed0 was measured 1241 → 753 rows/s at sf0.1: the extra
+    // materialization job + cache churn cost more per epoch than the
+    // second cheap md5 scan it saved). The bloom estimate is a fixed
+    // 1M (a ~1.2 MB bloom): micro-batches are trigger-bounded, and an
+    // over-large batch only prunes less.
+    val survivors0 = store.probe(batch.select(md5(col("text")).as("bh")),
+        "bh", batchId, 1000000L) match {
+      case None => hashed0 // no store yet, or every batch hash NULL
+      case Some(seen) =>
+        val probed = hashed0.join(seen,
+          col("content_md5") === col("h"), "left_anti")
+        graft.Stage.maybeExplain(
+          s"incremental_dedup store probe, batch $batchId", probed)
+        probed
     }
-    val nHp = hashParts(spark)
-    val survivors0 =
-      if (!hasStore) hashed0
-      else {
-        // Bloom-prefilter the store probe (VERDICT r19 #1, the
-        // dedup_bloom_prefilter shape): fold the BATCH's content
-        // hashes into a bloom and prune the store scan with it before
-        // the anti-join. No false negatives ⇒ every store hash that
-        // could eliminate a batch row survives, so survivors are
-        // identical; store-side rows entering the join drop from
-        // O(corpus history) to O(batch matches + false positives),
-        // which is what keeps the epoch cost flat as the store
-        // accumulates (the join otherwise re-broadcasts/re-shuffles
-        // the whole store every epoch). The bloom is a SCALAR SUBQUERY
-        // (the dedup_bloom_prefilter form), not an eager collect — an
-        // eager .head() added two driver round trips per epoch and
-        // regressed the composed pipeline stream at bench scale; the
-        // subquery builds inside the probing job itself. The item
-        // estimate is a fixed 1M (a ~1.2 MB bloom): micro-batches are
-        // trigger-bounded, and an over-large batch only raises the
-        // false-positive rate (less pruning), never correctness.
-        // the slim batch-hash scan (NO window, no persist — a persisted
-        // hashed0 was measured 1241 → 753 rows/s at sf0.1: the extra
-        // materialization job + cache churn cost more per epoch than
-        // the second cheap md5 scan it saved); it feeds the prefix
-        // collect and the bloom view
-        val batchHashes = batch.select(md5(col("text")).as("bh"))
-        val prefixes = touchedPrefixes(batchHashes, "bh", nHp)
-        if (prefixes.isEmpty) hashed0 // every batch hash NULL ⇒ all novel
-        else {
-          val suffix = s"${batchId}_${viewSeq.incrementAndGet()}"
-          val batchView = s"graft_incdedup_batch_md5_$suffix"
-          val storeView = s"graft_incdedup_store_md5_$suffix"
-          batchHashes.createOrReplaceTempView(batchView)
-          spark.read.schema(StoreSchema).parquet(storeDir)
-            // replay: own hashes excluded. Both predicates are
-            // PartitionFilters — batch_id bounds the epoch tail, hp
-            // prunes the listing to the batch's touched hash prefixes.
-            .filter(col("batch_id") < batchId &&
-              col("hp").isin(prefixes: _*))
-            .select(col("h"))
-            .createOrReplaceTempView(storeView)
-          val seenPruned = spark.sql(
-            s"""SELECT h FROM $storeView
-               |WHERE graft_might_contain(
-               |  (SELECT graft_bloom_agg(xxhash64(bh), 1000000L)
-               |   FROM $batchView),
-               |  xxhash64(h))""".stripMargin)
-          // spark.sql analyzed eagerly — the views are resolved into the
-          // plan and can be dropped before the probe even runs
-          spark.catalog.dropTempView(batchView)
-          spark.catalog.dropTempView(storeView)
-          val probed = hashed0.join(seenPruned,
-            col("content_md5") === col("h"), "left_anti")
-          maybeExplain(s"incremental_dedup store probe, batch $batchId",
-            probed)
-          probed
-        }
-      }
     val survivors = survivors0.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      survivors.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(outDir)
-      survivors.filter(col("content_md5").isNotNull)
-        .select(col("content_md5").as("h"))
-        .withColumn("batch_id", lit(batchId))
-        .withColumn("hp", hpCol(col("h"), nHp))
-        // one writer task → ≤ N files per epoch, NO shuffle (the cached
-        // survivors are micro-batch-sized; a repartition(hp) clustered
-        // files identically but cost a per-epoch exchange). Generation
-        // folds use the repartition form — they are the big writes.
-        .coalesce(1)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "hp")
-        .parquet(storeDir)
+      EpochStore.overwrite(survivors, outDir, batchId)
+      store.write(survivors.filter(col("content_md5").isNotNull)
+        .select(col("content_md5").as("h")), batchId, oneTask = true)
     } finally survivors.unpersist(blocking = true)
-    compactStore(spark, storeDir, batchId, compactEvery)
-  }
-
-  /** Partition ids present under `dir` (base epochs and generations). */
-  private[streaming] def storePartIds(spark: SparkSession,
-      dir: String): Seq[Long] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Option(fs.globStatus(new org.apache.hadoop.fs.Path(path, "batch_id=*")))
-      .map(_.toSeq).getOrElse(Seq.empty)
-      .flatMap(s => scala.util.Try(
-        s.getPath.getName.stripPrefix("batch_id=").toLong).toOption)
-  }
-
-  /** Replay-safe TIERED store compaction, run at the tail of batch
-    * `batchId`.
-    *
-    * Partition algebra: base partitions `batch_id = b >= 0` hold batch
-    * b's first-seen hashes; generations `batch_id = -B1 > -B2 > ...`
-    * form a CHAIN of disjoint epoch ranges — the generation `-B` holds
-    * the union of base epochs `[prevB, B)` where `prevB` is the
-    * next-older generation's boundary (0 for the first). Coverage is
-    * derivable from the sorted generation ids alone, so no manifest is
-    * needed. Folding ONLY the pending epoch tail (VERDICT r21 measure:
-    * the previous monolithic fold re-read and re-wrote the ENTIRE
-    * distinct history every compaction — an O(history) spike every
-    * `compactEvery` epochs, 7.2→7.8 s and growing at the 49-epoch
-    * probe vs a 4.6 s base epoch) makes every compaction
-    * O(compactEvery · batch): constant per compaction, so the epoch
-    * cost curve stays flat as the store accumulates. The trade is
-    * generation-count growth (1 per compactEvery epochs — 16× slower
-    * than uncompacted epoch growth); a second size-tiered merge level
-    * would bound it, but needs a manifest (or name-encoded ranges) to
-    * stay crash-safe and is left documented, not implemented.
-    *
-    * Invariants that keep replays exact with zero coordination:
-    *
-    *  1. A generation written at batch B folds only base epochs
-    *     `[prevB, B)` — never B's own partition, never another
-    *     generation — so a replayed batch B still probes a store
-    *     without its own hashes and rewrites `-B` from the same
-    *     not-yet-deleted inputs (idempotent).
-    *  2. Base inputs are deleted only when a generation covering them
-    *     was created by an EARLIER batch: the stream processes batch C
-    *     only after committing C-1, so `-g` with g < C is durable.
-    *     Until then the store holds duplicates, which left-anti
-    *     ignores. Generations themselves are immutable and never
-    *     deleted.
-    */
-  private[graft] def compactStore(spark: SparkSession, storeDir: String,
-      batchId: Long, compactEvery: Int, hashCol: String = "h"): Unit = {
-    if (compactEvery <= 0) return
-    val path = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = storePartIds(spark, storeDir)
-    // 1. drop base epochs covered by a generation a committed batch wrote
-    val cov = parts.filter(g => g < 0 && -g < batchId).map(-_)
-      .foldLeft(0L)(math.max)
-    parts.filter(p => p >= 0 && p < cov)
-      .foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(path, s"batch_id=$p"), true)
-      }
-    // 2. fold the pending base tail into a new generation when due —
-    // reads [cov, batchId) only, never the accumulated history
-    val pending = parts.count(p => p >= cov && p < batchId)
-    if (pending >= compactEvery && batchId > 0) {
-      val nHp = hashParts(spark)
-      spark.read.parquet(storeDir)
-        .filter(col("batch_id") >= cov && col("batch_id") < batchId)
-        .select(col(hashCol)).distinct()
-        .withColumn("batch_id", lit(-batchId))
-        // recomputed, not read through: pmod(xxhash64(key), N) of the
-        // same key value is identical, and recomputing keeps the
-        // generation correct even across an N reconfiguration
-        .withColumn("hp", hpCol(col(hashCol), nHp))
-        .repartition(col("hp"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "hp")
-        .parquet(storeDir)
-    }
+    store.compact(batchId, compactEvery)
   }
 
   /** Start the stream: `docs` is a streaming frame with (doc_id LONG,

@@ -93,14 +93,9 @@ object SketchStream {
           .head()
         val merged = CountMin.Agg.merge(
           snapshotAt(spark, outDir, batchId - 1), partial)
-        spark.createDataset(Seq(merged)).toDF("sk")
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
-        ()
+        EpochStore.overwrite(
+          spark.createDataset(Seq(merged)).toDF("sk").coalesce(1),
+          outDir, batchId)
       }
       .start()
   }

@@ -63,13 +63,8 @@ object StreamScaleProbe {
         .select("doc_id", "text")
 
     // ---- incremental dedup: epoch-cost curve over the full drain ----
-    // SPARK_GRAFT_COMPACT_EVERY=0 disables store compaction (the A/B
-    // for SCALING.md §recovery); default is the operator's default.
-    val compactEvery = sys.env.get("SPARK_GRAFT_COMPACT_EVERY")
-      .map(_.toInt).getOrElse(IncrementalDedupStream.DefaultCompactEvery)
     val (dedupSecs, epochs) = drain(IncrementalDedupStream.start(spark,
-      docsStream(2), s"$root/out", s"$root/store", s"$root/chk",
-      compactEvery))
+      docsStream(2), s"$root/out", s"$root/store", s"$root/chk"))
     val durs = epochs.sortBy(_._1).map(_._2)
     def avg(xs: Seq[Long]): Long =
       if (xs.isEmpty) 0L else xs.sum / xs.size

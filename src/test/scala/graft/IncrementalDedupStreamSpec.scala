@@ -65,7 +65,7 @@ class IncrementalDedupStreamSpec extends AnyFunSuite {
     // every stored hp value is the write-side function of its hash —
     // the probe recomputes the same function on the batch side, so a
     // mismatch here would break pruning correctness (missed duplicates)
-    val nHp = IncrementalDedupStream.hashParts(spark)
+    val nHp = graft.streaming.EpochStore.HashParts
     assert(stored.filter(
       col("hp") =!= pmod(xxhash64(col("h")), lit(nHp.toLong)))
       .count() == 0)
