@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{CompletableFuture, CompletionException,
+  ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.DatasetBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Plan-staging utilities for queries whose DAG fans out over one
@@ -45,22 +50,16 @@ object Stage {
     * loss, and are reclaimed by `spark.cleaner.referenceTracking
     * .cleanCheckpoints` once the frame is unreachable plus the local
     * shutdown hook below.
-    *
-    * MEMORY_AND_DISK keeps the staged relation spill-safe when a 100 TB
-    * corpus shard exceeds executor memory.
     */
   def fanout(shared: DataFrame)(build: DataFrame => DataFrame): DataFrame =
-    staging(shared) { persist =>
-      val staged = persist(shared)
+    staging(shared.sparkSession) { st =>
+      val staged = st.persist(shared)
       // materialize BEFORE the fan-out plan runs: the consumer stages are
       // independent and get submitted concurrently, so a lazily-built
       // cache would be raced — each stage recomputing the same partitions
       // ("Block already exists" churn) and saving nothing
       staged.queryExecution.toRdd.count()
-      // eager checkpoint: its count populates the staged result's cache
-      // (one evaluation of the fan-out joins), its write job then
-      // replays that cache into reliable files
-      persist(build(staged)).checkpoint()
+      st.checkpoint(build(staged))
     }
 
   /** Two-level [[fanout]]: stage `shared`, stage a relation `derive`d
@@ -75,34 +74,107 @@ object Stage {
     */
   def fanout2(shared: DataFrame)(derive: DataFrame => DataFrame)(
       build: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    staging(shared) { persist =>
-      val s1 = persist(shared)
+    staging(shared.sparkSession) { st =>
+      val s1 = st.persist(shared)
       s1.queryExecution.toRdd.count()
-      val s2 = persist(derive(s1))
+      val s2 = st.persist(derive(s1))
       s2.queryExecution.toRdd.count()
-      persist(build(s1, s2)).checkpoint()
+      st.checkpoint(build(s1, s2))
     }
 
-  /** Run `body` with a `persist` that stages a frame (MEMORY_AND_DISK),
-    * then release every frame it staged, latest first, whether `body`
-    * returns or throws.
+  /** Run `body` in a scope that owns every frame it stages
+    * ([[Scope.persist]], MEMORY_AND_DISK: spill-safe when a corpus shard
+    * exceeds executor memory) and every leg it starts.
     *
-    * Blocking release: lazy release leaves evicted-page/GC/cleaner debt
-    * that taxes every LATER query in the session (round-4 bench showed
-    * untouched queries running 2-8× slower downstream of staged ones);
-    * the result is already on checkpoint files, so waiting for the
-    * block drop costs only the drop itself.
+    *  - On exit, by return or throw, every frame still staged (not
+    *    [[Scope.release]]d early) is released, latest first, blocking:
+    *    lazy release leaves evicted-page/GC/cleaner debt that taxes every
+    *    LATER query in the session (round-4 bench: untouched queries 2-8×
+    *    slower downstream of staged ones).
+    *  - [[Scope.overlap]] starts a leg, independent work whose stages the
+    *    scheduler interleaves on idle cores, on this object's pool: with
+    *    the caller's Spark local properties as at the call (a pool thread
+    *    otherwise keeps its creator's) and in the scope's job group,
+    *    interrupt on cancel. The first failure of a leg or of `body`
+    *    cancels the group's current and future jobs; the scope joins
+    *    every leg, unbounded, and rethrows the first error.
+    *  - Under [[smallHeap]] a leg runs eagerly at its call site: the
+    *    co-resident staged mass of overlapped legs OOMs a small heap
+    *    (sf10-docs decade under 2 GiB; serial reps complete).
     */
-  private def staging(shared: DataFrame)(
-      body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
-    ensureCheckpointDir(shared.sparkSession)
-    var staged = List.empty[DataFrame]
-    try body { df =>
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      staged = p :: staged
-      p
-    } finally staged.foreach(_.unpersist(blocking = true))
+  def staging[T](s: SparkSession)(body: Scope => T): T = {
+    ensureCheckpointDir(s)
+    val scope = new Scope(s)
+    var ok = false
+    try { val out = body(scope); scope.joinLegs(); ok = true; out }
+    finally scope.close(failed = !ok)
   }
+
+  /** A staging scope: see [[staging]]. */
+  final class Scope private[Stage] (spark: SparkSession) {
+    private val group = s"graft-stage-${java.util.UUID.randomUUID()}"
+    private val firstError = new AtomicReference[Throwable]()
+    private var staged = List.empty[DataFrame] // guarded by `this`
+    private var legs = List.empty[CompletableFuture[_]] // body's thread only
+
+    /** True when legs run at their call site ([[smallHeap]]). */
+    val serial: Boolean = smallHeap(spark)
+
+    def persist(df: DataFrame,
+        level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      val p = df.persist(level)
+      synchronized { staged = p :: staged }
+      p
+    }
+
+    def release(df: DataFrame): Unit = {
+      synchronized { staged = staged.filterNot(_ eq df) }
+      df.unpersist(blocking = true)
+    }
+
+    /** `df` on reliable checkpoint files: staged so the count job fills
+      * the cache and the write job replays it, then released.
+      */
+    def checkpoint(df: DataFrame,
+        level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      val p = persist(df, level)
+      try p.checkpoint() finally release(p)
+    }
+
+    /** Start `body` as a leg; the function returned waits for its value. */
+    def overlap[T](body: => T): () => T =
+      if (serial) { val v = body; () => v }
+      else {
+        val leg = DatasetBridge.inJobGroup(spark, legPool, group)(body)
+        leg.whenComplete((_, e) => if (e != null) fail(e.getCause))
+        legs = leg :: legs
+        () => await(leg)
+      }
+
+    private def await[T](leg: CompletableFuture[T]): T =
+      try leg.join() catch {
+        case e: CompletionException => fail(e.getCause); throw firstError.get
+      }
+
+    private def fail(e: Throwable): Unit =
+      if (firstError.compareAndSet(null, e)) cancel()
+
+    private def cancel(): Unit = spark.sparkContext
+      .cancelJobGroupAndFutureJobs(group, "its staging scope failed")
+
+    private[Stage] def joinLegs(): Unit = legs.foreach(await(_))
+
+    private[Stage] def close(failed: Boolean): Unit = {
+      if (failed && legs.nonEmpty) cancel()
+      legs.foreach(leg => scala.util.Try(leg.join()))
+      synchronized(staged).foreach(_.unpersist(blocking = true))
+    }
+  }
+
+  private lazy val legPool: ExecutorService =
+    Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-stage-leg"); t.setDaemon(true); t
+    }
 
   /** Small-heap plan gate for the memory-tight execution shapes
     * (shuffle-hash instead of broadcast probes, serial barriers +

@@ -38,14 +38,11 @@ object KMeans {
       s: SparkSession,
       dir: String,
       k: Int = 8,
-      maxIters: Int = 10): Result = {
-    import s.implicits._
-
-    val vecs = graft.Tables.embeddings(s, dir)
+      maxIters: Int = 10): Result = graft.Stage.staging(s) { st =>
+    val vecs = st.persist(graft.Tables.embeddings(s, dir)
       .select(col("vec_id"), expr(
         "transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000.0, 0) AS BIGINT))")
-        .as("v"))
-      .persist()
+        .as("v")))
     vecs.count(): Unit
 
     // deterministic seeds: the k lowest vec_ids
@@ -90,7 +87,6 @@ object KMeans {
       centroids = next
       it += 1
     }
-    vecs.unpersist(): Unit
     Result(it, converged, objective, sizes)
   }
 }

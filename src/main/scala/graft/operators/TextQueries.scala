@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.Tables._
 
 /** Text-analysis + deduplication operators for LLM-data pipelines
@@ -1595,14 +1596,6 @@ object TextQueries {
     */
   private[graft] def incrementalNearSplit(s: SparkSession, d: String,
       corpusPred: Column, batchPred: Column): DataFrame = {
-    var tPhase = System.nanoTime()
-    def phase(tag: String): Unit = {
-      if (sys.env.contains("GRAFT_PHASE_LOG")) {
-        val now = System.nanoTime()
-        println(f"[phase] inc_near $tag ${(now - tPhase) / 1e9}%.2f s")
-        tPhase = now
-      }
-    }
     val docs = documents(s, d)
     val corpus = docs.filter(corpusPred)
     val batch = docs.filter(batchPred)
@@ -1621,7 +1614,6 @@ object TextQueries {
         .select(col("gh"), col("doc_id").as("corpus_doc"))
       incNearCandProbe(s, gram8(batch), idx)
     }
-    phase("candidates")
     // exact-J4 verify over candidate docs only, reusing the rare-gram
     // verify body under its doc_a/doc_b contract (doc_a = batch side)
     val candAb = cand.select(col("batch_doc").as("doc_a"),
@@ -1641,7 +1633,6 @@ object TextQueries {
       .agg(sort_array(collect_set(col("gh"))).as("ghs"))
       .withColumn("n", size(col("ghs")).cast("bigint"))
     val verified = graft.Stage.fanout(g4raw)(rareVerifyBuild(candAb))
-    phase("verify")
     verified
       .select(col("doc_a").as("batch_doc"), col("doc_b").as("corpus_doc"),
         col("n_rare_shared"), col("jaccard"))
@@ -2290,91 +2281,75 @@ object TextQueries {
   // expensive legs are the dedup pipelines themselves, each already
   // staged/checkpoint-backed.
   // -------------------------------------------------------------------
-  def dedupAgreement(s: SparkSession, d: String): DataFrame = {
-    // The three flag legs backed by eager staged pipelines
-    // (neardupPairsCore's fanout2, containmentCore's and
-    // passageDedupCore's fanout) otherwise materialize strictly one
-    // after another at construction time — overlap them (guide §2.6,
-    // the retrievalAgreement discipline): each is an independent
-    // persist→checkpoint chain whose stages the scheduler interleaves
-    // on idle cores. Under a small heap the co-resident staged mass
-    // inverts the trade (the retrieval composite's measured lesson) —
-    // same Stage.smallHeap gate, serial there.
-    graft.Stage.ensureCheckpointDir(s)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val overlap = !graft.Stage.smallHeap(s)
-    def maybeAsync(body: => DataFrame): () => DataFrame =
-      if (overlap) { val f = Future(body); () => Await.result(f, Duration.Inf) }
-      else { val v = body; () => v }
-    val nearF = maybeAsync(neardupPairsCore(s, d))
-    val contF = maybeAsync(containmentCore(s, d))
-    val passF = maybeAsync(passageDedupCore(s, d))
-    val exactDocs = documents(s, d)
-      .select(col("doc_id"), md5(col("text")).as("h"))
-      .withColumn("nh", count(lit(1)).over(Window.partitionBy("h")))
-      .filter(col("nh") > 1).select("doc_id")
-    val bagDocs = documents(s, d)
-      .select(col("doc_id"),
-        md5(concat_ws(" ",
-          sort_array(expr("filter(split(text, ' '), x -> x <> '')"))))
-          .as("bh"))
-      .withColumn("nb", count(lit(1)).over(Window.partitionBy("bh")))
-      .filter(col("nb") > 1).select("doc_id")
-    val nearDocs = nearF()
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val contDocs = contF()
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val passDocs = passF().filter(col("flagged"))
-      .select("doc_id")
-    val substrDocs = substringDedupCore(s, d)
-      .filter(col("dup_windows") * 2 >= col("n_windows") &&
-        col("n_windows") > 0)
-      .select("doc_id")
-    val rel = exactDocs.withColumn("method", lit("exact"))
-      .unionByName(bagDocs.withColumn("method", lit("bag")))
-      .unionByName(nearDocs.withColumn("method", lit("near")))
-      .unionByName(contDocs.withColumn("method", lit("containment")))
-      .unionByName(passDocs.withColumn("method", lit("passage")))
-      .unionByName(substrDocs.withColumn("method", lit("substring")))
-      .select("method", "doc_id")
-    // ONE pass over the flag relation, no composite-level staging: the
-    // per-doc method set explodes into its ordered in-set pairs
-    // (diagonal included), so pair counts AND method sizes fall out of
-    // a single ≤(C(6,2)+6)-row aggregate — where the previous self-join
-    // shape consumed the relation three times and needed its own
-    // persist+checkpoint round-trip on top of the constituents'
-    // (measured: the staging overhead, not the pipelines, was the gap
-    // between the composite and its sum of parts). The tiny pair-count
-    // relation is collected and the report assembled driver-side —
-    // bounded at (#methods choose 2) + #methods rows regardless of
-    // corpus size, the same bounded-collect contract as KMeans.
-    val pairs = expr(
-      "flatten(transform(ms, (a, i) -> transform(" +
-        "slice(ms, i + 1, size(ms) - i), " +
-        "b -> struct(a AS method_a, b AS method_b))))")
-    val counts = rel.groupBy("doc_id")
-      .agg(sort_array(collect_set(col("method"))).as("ms"))
-      .select(explode(pairs).as("p"))
-      .groupBy(col("p.method_a").as("method_a"),
-        col("p.method_b").as("method_b"))
-      .agg(count(lit(1)).as("n_both"))
-      .collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val sizes = counts.collect { case (ma, mb, n) if ma == mb => ma -> n }
-      .toMap
-    val rows = counts.map { case (ma, mb, nBoth) =>
-      val na = sizes(ma); val nb = sizes(mb)
-      val nEither = na + nb - nBoth
-      (ma, mb, na, nb, nBoth, nEither, nBoth.toDouble / nEither)
+  def dedupAgreement(s: SparkSession, d: String): DataFrame =
+    graft.Stage.staging(s) { st =>
+      val nearF = st.overlap(neardupPairsCore(s, d))
+      val contF = st.overlap(containmentCore(s, d))
+      val passF = st.overlap(passageDedupCore(s, d))
+      val exactDocs = documents(s, d)
+        .select(col("doc_id"), md5(col("text")).as("h"))
+        .withColumn("nh", count(lit(1)).over(Window.partitionBy("h")))
+        .filter(col("nh") > 1).select("doc_id")
+      val bagDocs = documents(s, d)
+        .select(col("doc_id"),
+          md5(concat_ws(" ",
+            sort_array(expr("filter(split(text, ' '), x -> x <> '')"))))
+            .as("bh"))
+        .withColumn("nb", count(lit(1)).over(Window.partitionBy("bh")))
+        .filter(col("nb") > 1).select("doc_id")
+      val nearDocs = nearF()
+        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+        .distinct()
+      val contDocs = contF()
+        .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+        .distinct()
+      val passDocs = passF().filter(col("flagged"))
+        .select("doc_id")
+      val substrDocs = substringDedupCore(s, d)
+        .filter(col("dup_windows") * 2 >= col("n_windows") &&
+          col("n_windows") > 0)
+        .select("doc_id")
+      val rel = exactDocs.withColumn("method", lit("exact"))
+        .unionByName(bagDocs.withColumn("method", lit("bag")))
+        .unionByName(nearDocs.withColumn("method", lit("near")))
+        .unionByName(contDocs.withColumn("method", lit("containment")))
+        .unionByName(passDocs.withColumn("method", lit("passage")))
+        .unionByName(substrDocs.withColumn("method", lit("substring")))
+        .select("method", "doc_id")
+      // ONE pass over the flag relation, no composite-level staging: the
+      // per-doc method set explodes into its ordered in-set pairs
+      // (diagonal included), so pair counts AND method sizes fall out of
+      // a single ≤(C(6,2)+6)-row aggregate — where the previous self-join
+      // shape consumed the relation three times and needed its own
+      // persist+checkpoint round-trip on top of the constituents'
+      // (measured: the staging overhead, not the pipelines, was the gap
+      // between the composite and its sum of parts). The tiny pair-count
+      // relation is collected and the report assembled driver-side —
+      // bounded at (#methods choose 2) + #methods rows regardless of
+      // corpus size, the same bounded-collect contract as KMeans.
+      val pairs = expr(
+        "flatten(transform(ms, (a, i) -> transform(" +
+          "slice(ms, i + 1, size(ms) - i), " +
+          "b -> struct(a AS method_a, b AS method_b))))")
+      val counts = rel.groupBy("doc_id")
+        .agg(sort_array(collect_set(col("method"))).as("ms"))
+        .select(explode(pairs).as("p"))
+        .groupBy(col("p.method_a").as("method_a"),
+          col("p.method_b").as("method_b"))
+        .agg(count(lit(1)).as("n_both"))
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      val sizes = counts.collect { case (ma, mb, n) if ma == mb => ma -> n }
+        .toMap
+      val rows = counts.map { case (ma, mb, nBoth) =>
+        val na = sizes(ma); val nb = sizes(mb)
+        val nEither = na + nb - nBoth
+        (ma, mb, na, nb, nBoth, nEither, nBoth.toDouble / nEither)
+      }
+      s.createDataFrame(rows).toDF("method_a", "method_b", "na", "nb",
+          "n_both", "n_either", "agreement")
+        .orderBy("method_a", "method_b")
     }
-    s.createDataFrame(rows).toDF("method_a", "method_b", "na", "nb",
-        "n_both", "n_either", "agreement")
-      .orderBy("method_a", "method_b")
-  }
 
   // lazy: interpolates containmentSql/substringDedupSql, which are
   // declared LATER in this object — an eager val would bake their
@@ -2886,142 +2861,66 @@ object TextQueries {
   // 3 GiB), and the pair-level view is the informative one for a
   // method built to reach pairs the others cannot.
   // -------------------------------------------------------------------
-  def retrievalAgreement(s: SparkSession, d: String): DataFrame = {
-    // Single-pass staging (VERDICT r16 #3): r16 composed the two cores
-    // verbatim, so the corpus' char-grams were md5-hashed TWICE (the
-    // measured bound at the big decade). This orchestration runs ONE
-    // 8-gram pass (posting lists + blocking minima) and ONE 4-gram
-    // pass (both pipelines' exact-J4 verify arrays), persists the
-    // array relation once, and releases each staged input as soon as
-    // its last consumer has materialized. Output rows are identical to
-    // the r16 composition (CrossOperatorSpec pins the partition).
-    import org.apache.spark.storage.StorageLevel
-    graft.Stage.ensureCheckpointDir(s)
-    var t0 = System.nanoTime()
-    def phase(tag: String): Unit = {
-      if (sys.env.contains("GRAFT_PHASE_LOG")) {
-        val now = System.nanoTime()
-        println(f"[phase] $tag ${(now - t0) / 1e9}%.2f s")
-        t0 = now
-      }
+  def retrievalAgreement(s: SparkSession, d: String): DataFrame =
+    graft.Stage.staging(s) { st =>
+      // Single-pass staging (VERDICT r16 #3): r16 composed the two cores
+      // verbatim, so the corpus' char-grams were md5-hashed TWICE (the
+      // measured bound at the big decade). This orchestration runs ONE
+      // 8-gram pass (posting lists + blocking minima) and ONE 4-gram
+      // pass (both pipelines' exact-J4 verify arrays), persists the
+      // array relation once, and releases each staged input as soon as
+      // its last consumer has materialized. Output rows are identical to
+      // the r16 composition (CrossOperatorSpec pins the partition).
+      //
+      // Under a small heap the staged relations (g8 ≈ 16 B × postings,
+      // docgr ≈ the corpus' gram arrays) dwarf storage memory and their
+      // eviction churn starves the aggregation maps ("got 0" OOMs,
+      // measured at the sf10-docs decade under 2 GiB) — stage straight
+      // to disk instead, the cluster answer for memory-tight executors
+      val level =
+        if (st.serial) StorageLevel.DISK_ONLY else StorageLevel.MEMORY_AND_DISK
+      val g8 = st.persist(g8Hashes(s, d), level)
+      g8.queryExecution.toRdd.count()
+      val candF = st.overlap(st.checkpoint(rareCandBuild(
+        g8.select(col("doc_id"), col("gh8").as("gh"))), level))
+      // corpus-wide per-doc arrays exist for the blocking side anyway, so
+      // the retrieval verify prunes them from cache (left-semi below)
+      // instead of re-hashing a pruned parquet scan as standalone does
+      val docgr = st.persist(docGramBlocks(g8, doc4Arrays(s, d)), level)
+      docgr.queryExecution.toRdd.count()
+      val cand = candF()
+      st.release(g8) // both md5-8 consumers materialized
+      val bPairsF = st.overlap(st.checkpoint(ngramPairsBuild(docgr), level))
+      val candDocs = cand.select(col("doc_a").as("doc_id"))
+        .unionByName(cand.select(col("doc_b").as("doc_id")))
+        .distinct()
+      // persist the pruned array relation: rareVerifyBuild consumes it
+      // twice, and each un-persisted evaluation would re-scan the full
+      // docgr array cache behind the semi-join
+      val g4 = st.persist(docgr.select(col("doc_id"), col("ghs"), col("n"))
+        .join(candDocs, Seq("doc_id"), "left_semi"), level)
+      // materialize before the fan-out consumes it twice — a lazily
+      // built cache would be raced (see Stage.fanout)
+      g4.queryExecution.toRdd.count()
+      val rPairs = st.checkpoint(rareVerifyBuild(cand)(g4), level)
+      st.release(g4)
+      val bPairs = bPairsF()
+      st.release(docgr)
+      val b = ngramPairsScore(bPairs)
+        .select(col("doc_a"), col("doc_b"), col("jaccard").as("j_b"))
+      val r = rPairs
+        .select(col("doc_a"), col("doc_b"), col("jaccard").as("j_r"))
+      b.join(r, Seq("doc_a", "doc_b"), "full_outer")
+        .select(
+          when(col("j_b").isNotNull && col("j_r").isNotNull, lit("both"))
+            .when(col("j_b").isNotNull, lit("blocking_only"))
+            .otherwise(lit("retrieval_only")).as("side"),
+          coalesce(col("j_b"), col("j_r")).as("j"))
+        .groupBy("side")
+        .agg(count(lit(1)).as("n_pairs"),
+          min(col("j")).as("min_jaccard"), max(col("j")).as("max_jaccard"))
+        .orderBy("side")
     }
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import java.util.concurrent.TimeUnit.MINUTES
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Overlapping the two pipelines halves the barrier count but
-    // doubles the CO-RESIDENT staged mass; under a small heap that
-    // trade inverts (measured at the sf10-docs decade under 2 GiB:
-    // overlapped reps OOM nondeterministically in the pair stages,
-    // serial reps complete). Overlap only when the heap has headroom —
-    // same Stage.smallHeap gate (conf-overridable) as the near-dup
-    // screen's probe shape.
-    val overlap = !graft.Stage.smallHeap(s)
-    // under a small heap the staged relations (g8 ≈ 16 B × postings,
-    // docgr ≈ the corpus' gram arrays) dwarf storage memory and their
-    // eviction churn starves the aggregation maps ("got 0" OOMs,
-    // measured at the sf10-docs decade under 2 GiB) — stage straight
-    // to disk instead, the cluster answer for memory-tight executors
-    val stagedLevel =
-      if (overlap) StorageLevel.MEMORY_AND_DISK else StorageLevel.DISK_ONLY
-    // Failure-path hygiene: every persist is tracked, every overlapped
-    // future is registered, and the finally below releases whatever an
-    // exception left staged (and awaits any still-running future so it
-    // cannot keep submitting jobs against a torn-down pipeline) — the
-    // session-churn tax the blocking unpersists exist to prevent must
-    // hold on the error path too. On success everything is already
-    // unpersisted and the finally is a no-op (storageLevel == NONE).
-    val stagedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val pendingF = scala.collection.mutable.ArrayBuffer.empty[Future[_]]
-    def stage(df: DataFrame): DataFrame = {
-      val p = df.persist(stagedLevel); stagedFrames += p; p
-    }
-    // serial mode evaluates EAGERLY at the call site: the candidate
-    // build must run while only g8 is staged (before docgr joins it in
-    // memory), which is exactly the original barrier order
-    def maybeAsync[T](body: => T): () => T =
-      if (overlap) {
-        val f = Future(body); pendingF += f
-        () => Await.result(f, Duration.Inf)
-      } else { val v = body; () => v }
-    try {
-    val g8 = stage(g8Hashes(s, d))
-    g8.queryExecution.toRdd.count()
-    phase("g8_stage")
-    // the candidate pipeline (cache-only) and the docgr staging (the
-    // 4-gram md5 scan) are independent — overlap them; local[32] has
-    // the idle cores, and on a cluster these are disjoint stages the
-    // scheduler can interleave
-    val candF = maybeAsync {
-      val candRaw = stage(rareCandBuild(
-        g8.select(col("doc_id"), col("gh8").as("gh"))))
-      val cand = candRaw.checkpoint()
-      candRaw.unpersist(blocking = true)
-      cand
-    }
-    // corpus-wide per-doc arrays exist for the blocking side anyway, so
-    // the retrieval verify prunes them from cache (left-semi below)
-    // instead of re-hashing a pruned parquet scan as standalone does
-    val docgr = stage(docGramBlocks(g8, doc4Arrays(s, d)))
-    docgr.queryExecution.toRdd.count()
-    val cand = candF()
-    g8.unpersist(blocking = true) // both md5-8 consumers materialized
-    phase("stage_cand_docgr")
-    // blocking-pair generation and retrieval verify both read the
-    // docgr cache and nothing else in common — overlap them too
-    val bPairsF = maybeAsync {
-      val bPairsRaw = stage(ngramPairsBuild(docgr))
-      val bPairs = bPairsRaw.checkpoint()
-      bPairsRaw.unpersist(blocking = true)
-      bPairs
-    }
-    val candDocs = cand.select(col("doc_a").as("doc_id"))
-      .unionByName(cand.select(col("doc_b").as("doc_id")))
-      .distinct()
-    // persist the pruned array relation: rareVerifyBuild consumes it
-    // twice, and each un-persisted evaluation would re-scan the full
-    // docgr array cache behind the semi-join
-    val g4 = stage(docgr.select(col("doc_id"), col("ghs"), col("n"))
-      .join(candDocs, Seq("doc_id"), "left_semi"))
-    // materialize before the fan-out consumes it twice — a lazily
-    // built cache would be raced (see Stage.fanout)
-    g4.queryExecution.toRdd.count()
-    val rPairsRaw = stage(rareVerifyBuild(cand)(g4))
-    val rPairs = rPairsRaw.checkpoint()
-    rPairsRaw.unpersist(blocking = true)
-    g4.unpersist(blocking = true)
-    val bPairs = bPairsF()
-    docgr.unpersist(blocking = true)
-    phase("pairs_verify")
-    val b = ngramPairsScore(bPairs)
-      .select(col("doc_a"), col("doc_b"), col("jaccard").as("j_b"))
-    val r = rPairs
-      .select(col("doc_a"), col("doc_b"), col("jaccard").as("j_r"))
-    b.join(r, Seq("doc_a", "doc_b"), "full_outer")
-      .select(
-        when(col("j_b").isNotNull && col("j_r").isNotNull, lit("both"))
-          .when(col("j_b").isNotNull, lit("blocking_only"))
-          .otherwise(lit("retrieval_only")).as("side"),
-        coalesce(col("j_b"), col("j_r")).as("j"))
-      .groupBy("side")
-      .agg(count(lit(1)).as("n_pairs"),
-        min(col("j")).as("min_jaccard"), max(col("j")).as("max_jaccard"))
-      .orderBy("side")
-    } finally {
-      // quench any still-running overlapped future first (so no job is
-      // submitted against frames this block is about to drop), then
-      // release whatever is still staged; both are no-ops on success.
-      // Bounded wait: on the error path a future can be wedged by the
-      // same failure that raised the exception — an Inf await here
-      // would hang the run instead of surfacing it, so give each
-      // future a generous drain window and then proceed to unpersist
-      pendingF.foreach(f =>
-        scala.util.Try(Await.result(f, Duration(5, MINUTES))): Unit)
-      stagedFrames.foreach(p =>
-        if (p.storageLevel != StorageLevel.NONE)
-          scala.util.Try(p.unpersist(blocking = true)): Unit)
-    }
-  }
 
   val retrievalAgreementSql: String = {
     val nj = ngramJaccardSql.replace("ORDER BY doc_a, doc_b", "")

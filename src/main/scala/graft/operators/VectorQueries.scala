@@ -1486,51 +1486,50 @@ object VectorQueries {
     s"(CAST($sv[$i] AS DOUBLE) - $c[$i]) * (CAST($sv[$i] AS DOUBLE) - $c[$i])"
   }.mkString(" + ")
 
-  def pqCodebook(s: SparkSession, d: String): DataFrame = {
-    val sv = embeddings(s, d)
-      .select(col("vec_id"), expr(
-        "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
-        .as("v"))
-      .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("sub"), col("v"))
-      .select(col("vec_id"), col("sub"), expr("slice(v, sub * 8 + 1, 8)").as("sv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sv.queryExecution.toRdd.count(): Unit // materialize before the loop
-    // seeds: the 16 lowest vec_ids' subvectors; code = seed vec_id
-    var cent: Seq[(Int, Long, Seq[Double])] = sv.filter(col("vec_id") < PqK)
-      .collect().toSeq
-      .map(r => (r.getInt(1), r.getLong(0), r.getSeq[Long](2).map(_.toDouble)))
-    var last: Seq[(Int, Long, Long, Seq[Long])] = Seq.empty
-    for (_ <- 1 to PqIters) {
-      val centDf = broadcast(s.createDataFrame(cent).toDF("csub", "code", "c"))
-      val w = Window.partitionBy("vec_id", "sub")
-        .orderBy(col("dist"), col("code"))
-      val assigned = sv.join(centDf, col("sub") === col("csub"))
-        .withColumn("dist", pqDist)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      val stats = assigned.groupBy("sub", "code")
-        .agg(count(lit(1)).as("n"),
-          call_function("array_sum_agg", col("sv")).as("sums"))
+  def pqCodebook(s: SparkSession, d: String): DataFrame =
+    graft.Stage.staging(s) { st =>
+      val sv = st.persist(embeddings(s, d)
+        .select(col("vec_id"), expr(
+          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT))")
+          .as("v"))
+        .select(col("vec_id"), explode(expr("sequence(0, 7)")).as("sub"), col("v"))
+        .select(col("vec_id"), col("sub"), expr("slice(v, sub * 8 + 1, 8)").as("sv")))
+      sv.queryExecution.toRdd.count(): Unit // materialize before the loop
+      // seeds: the 16 lowest vec_ids' subvectors; code = seed vec_id
+      var cent: Seq[(Int, Long, Seq[Double])] = sv.filter(col("vec_id") < PqK)
         .collect().toSeq
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3)))
-      val prev = cent.map { case (sub, code, c) => (sub, code) -> c }.toMap
-      cent = cent.map { case (sub, code, _) =>
-        stats.find(t => t._1 == sub && t._2 == code) match {
-          case Some((_, _, n, sums)) => (sub, code, sums.map(_.toDouble / n))
-          case None => (sub, code, prev((sub, code)))
+        .map(r => (r.getInt(1), r.getLong(0), r.getSeq[Long](2).map(_.toDouble)))
+      var last: Seq[(Int, Long, Long, Seq[Long])] = Seq.empty
+      for (_ <- 1 to PqIters) {
+        val centDf = broadcast(s.createDataFrame(cent).toDF("csub", "code", "c"))
+        val w = Window.partitionBy("vec_id", "sub")
+          .orderBy(col("dist"), col("code"))
+        val assigned = sv.join(centDf, col("sub") === col("csub"))
+          .withColumn("dist", pqDist)
+          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        val stats = assigned.groupBy("sub", "code")
+          .agg(count(lit(1)).as("n"),
+            call_function("array_sum_agg", col("sv")).as("sums"))
+          .collect().toSeq
+          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3)))
+        val prev = cent.map { case (sub, code, c) => (sub, code) -> c }.toMap
+        cent = cent.map { case (sub, code, _) =>
+          stats.find(t => t._1 == sub && t._2 == code) match {
+            case Some((_, _, n, sums)) => (sub, code, sums.map(_.toDouble / n))
+            case None => (sub, code, prev((sub, code)))
+          }
         }
+        last = stats
       }
-      last = stats
+      s.createDataFrame(last).toDF("sub", "code", "n_vectors", "sums")
+        .select((col("sub") + 1).as("sub_id"), col("code"), col("n_vectors"),
+          posexplode(col("sums")).as(Seq("di", "q_sum")))
+        .select(col("sub_id"), col("code"),
+          (col("di") + 1).cast("int").as("dim"), col("n_vectors"),
+          col("q_sum"),
+          (col("q_sum").cast("double") / col("n_vectors")).as("centroid"))
+        .orderBy("sub_id", "code", "dim")
     }
-    sv.unpersist(blocking = true)
-    s.createDataFrame(last).toDF("sub", "code", "n_vectors", "sums")
-      .select((col("sub") + 1).as("sub_id"), col("code"), col("n_vectors"),
-        posexplode(col("sums")).as(Seq("di", "q_sum")))
-      .select(col("sub_id"), col("code"),
-        (col("di") + 1).cast("int").as("dim"), col("n_vectors"),
-        col("q_sum"),
-        (col("q_sum").cast("double") / col("n_vectors")).as("centroid"))
-      .orderBy("sub_id", "code", "dim")
-  }
 
   val pqCodebookSql: String = {
     def assign(cRel: String): String =

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.storage.StorageLevel
 
 /** Online similarity retrieval — the serving form of the batch ANN
   * operators: a stream of query vectors is answered per micro-batch
@@ -137,11 +136,7 @@ object AnnStream {
     val corpus = base
       .withColumn("e", expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       .select(col("vec_id"), col("label"), col("e"), col("nrm"), col("list_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize BEFORE batch 1, so the first query doesn't pay the
-    // parquet scan + assignment/norm computation under serving latency
-    corpus.queryExecution.toRdd.count()
-    val query = try queries.writeStream
+    StreamLifecycle.pin(spark, corpus) { corpus => queries.writeStream
       .option("checkpointLocation", chkDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // write STRAIGHT INTO the batch's partition directory: a batch
@@ -166,20 +161,6 @@ object AnnStream {
         ()
       }
       .start()
-    catch {
-      // a failed start must not leak the materialized corpus into the
-      // session cache (the cross-query tax Stage.fanout guards against)
-      case e: Throwable => corpus.unpersist(blocking = true); throw e
     }
-    // release the serving cache when THIS query terminates — the stream
-    // handle outlives start(), so cleanup must be event-driven (and
-    // race-hardened: StreamLifecycle also covers a query that died
-    // before the listener registered). Non-blocking here, unlike
-    // Stage.fanout: this runs on the listener bus thread, where a
-    // blocking drop would stall event dispatch, and no query is
-    // waiting behind a terminated stream.
-    StreamLifecycle.onTerminated(spark, query)(
-      () => corpus.unpersist(blocking = false))
-    query
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.storage.StorageLevel
 
 /** Online benchmark decontamination — the streaming twin of
   * `dedup_decontaminate`: incoming crawl batches are checked against
@@ -22,26 +21,28 @@ import org.apache.spark.storage.StorageLevel
   */
 object DecontaminateStream {
 
-  /** Start the stream: `docs` is a streaming frame with (doc_id LONG,
-    * text STRING); the eval set is `sfDir`'s documents with
-    * `doc_id % 13 == 0` (the batch operator's rule).
+  /** The eval holdout's distinct passage hashes (eph LONG): `sfDir`'s
+    * documents with `doc_id % 13 == 0` (the batch operator's rule).
     */
-  def start(spark: SparkSession, docs: DataFrame, sfDir: String,
-      outDir: String, chkDir: String): StreamingQuery = {
-    graft.Session.setup(spark)
-    val evalSet = graft.operators.TextQueries
+  def evalSet(spark: SparkSession, sfDir: String): DataFrame =
+    graft.operators.TextQueries
       .passageHashes(
         graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 13 === 0),
         stride = 1)
       .select(col("ph").as("eph")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    evalSet.queryExecution.toRdd.count()
-    val query = try docs.writeStream
+
+  /** Start the stream: `docs` is a streaming frame with (doc_id LONG,
+    * text STRING), checked against [[evalSet]].
+    */
+  def start(spark: SparkSession, docs: DataFrame, sfDir: String,
+      outDir: String, chkDir: String): StreamingQuery = {
+    graft.Session.setup(spark)
+    StreamLifecycle.pin(spark, evalSet(spark, sfDir)) { eval => docs.writeStream
       .option("checkpointLocation", chkDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val perDoc = graft.operators.TextQueries
           .passageHashes(batch, stride = 1)
-          .join(evalSet, col("ph") === col("eph"), "left")
+          .join(eval, col("ph") === col("eph"), "left")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_passages"), count(col("eph")).as("n_hits"))
         // EVERY doc in the batch gets a verdict row: a sub-8-token doc
@@ -56,13 +57,6 @@ object DecontaminateStream {
           outDir, batchId)
       }
       .start()
-    catch {
-      case e: Throwable => evalSet.unpersist(blocking = true); throw e
     }
-    // non-blocking: listener-bus thread (see AnnStream) — blocking
-    // release is for the per-query batch path, not stream teardown
-    StreamLifecycle.onTerminated(spark, query)(
-      () => evalSet.unpersist(blocking = false))
-    query
   }
 }

@@ -191,14 +191,19 @@ object EpochStore {
 
   /** Write `df` as epoch `batchId` of `dir`: rows land in
     * `dir/batch_id=batchId`, partitioned further by `partitionBy`, and
-    * replace only that epoch's partitions (dynamic partition
-    * overwrite), so a replayed epoch replaces its earlier attempt.
+    * replace that whole epoch, so a replayed epoch replaces its earlier
+    * attempt. The epoch is deleted first: a dynamic overwrite replaces
+    * only the partitions the new rows cover.
     */
   def overwrite(df: DataFrame, dir: String, batchId: Long,
-      partitionBy: String*): Unit =
+      partitionBy: String*): Unit = {
+    val epoch = new Path(dir, s"batch_id=$batchId")
+    epoch.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      .delete(epoch, true)
     df.withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id" +: partitionBy: _*)
       .parquet(dir)
+  }
 }

@@ -219,30 +219,20 @@ object PipelineStream {
   }
 
   /** Start the composed pipeline over a streaming documents frame.
-    * `sfDir` supplies the static eval holdout (doc_id % 13 == 0), the
-    * batch operator's rule.
+    * `sfDir` supplies the static eval holdout
+    * ([[DecontaminateStream.evalSet]]).
     */
   def start(spark: SparkSession, docs: DataFrame, sfDir: String,
       outDir: String, storeDir: String, chkDir: String): StreamingQuery = {
     graft.Session.setup(spark)
-    val evalSet = TextQueries.passageHashes(
-        graft.Tables.documents(spark, sfDir).filter(col("doc_id") % 13 === 0),
-        stride = 1)
-      .select(col("ph").as("eph")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    evalSet.queryExecution.toRdd.count()
-    val query = try docs.writeStream
-      .option("checkpointLocation", chkDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, evalSet, outDir, storeDir)
-      }
-      .start()
-    catch {
-      case e: Throwable => evalSet.unpersist(blocking = true); throw e
+    StreamLifecycle.pin(spark, DecontaminateStream.evalSet(spark, sfDir)) {
+      evalSet => docs.writeStream
+        .option("checkpointLocation", chkDir)
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          processBatch(batch, batchId, evalSet, outDir, storeDir)
+        }
+        .start()
     }
-    StreamLifecycle.onTerminated(spark, query)(
-      () => evalSet.unpersist(blocking = false))
-    query
   }
 
   /** Cumulative stage card over everything the stream has committed —

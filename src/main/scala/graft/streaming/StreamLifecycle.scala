@@ -1,12 +1,13 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.storage.StorageLevel
 
 /** One hardened implementation of "run this cleanup when THAT query
-  * terminates" shared by the lease and cache lifecycles (CdcRelay,
-  * AnnStream, DecontaminateStream). Races a naive listener misses:
+  * terminates" shared by the lease and cache lifecycles (CdcRelay's
+  * lease, [[pin]]). Races a naive listener misses:
   *
   *   - events must match on `runId`, not `id`: the query id is STABLE
   *     across restarts from the same checkpoint dir, so a late
@@ -46,6 +47,21 @@ object StreamLifecycle {
       runOnce()
       spark.streams.removeListener(listener)
     }
+  }
+
+  /** Start a query serving from `df`, cached (and materialized before
+    * `start`, so batch 1 does not build it) for the query's lifetime. A
+    * failed start releases it at once, blocking; a terminated query
+    * releases it from the listener-bus thread, non-blocking, since a
+    * blocking drop there would stall event dispatch.
+    */
+  def pin(spark: SparkSession, df: DataFrame)(
+      start: DataFrame => StreamingQuery): StreamingQuery = {
+    val pinned = df.persist(StorageLevel.MEMORY_AND_DISK)
+    val query = try { pinned.queryExecution.toRdd.count(); start(pinned) }
+      catch { case e: Throwable => pinned.unpersist(blocking = true); throw e }
+    onTerminated(spark, query)(() => pinned.unpersist(blocking = false))
+    query
   }
 
   /** Run `action` on every trigger of `query` — PROGRESS and IDLE

@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.{CompletableFuture, ExecutorService}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Bridge into the `private[sql]` Dataset constructor — the standard
   * technique for libraries that add whole logical operators (the same
@@ -80,6 +83,20 @@ object DatasetBridge {
     classic.Dataset.ofRows(cs,
       org.apache.spark.sql.execution.LogicalRDD(attrs, rdd)(cs))
   }
+
+  /** Run `body` on `pool` with the caller's local properties and
+    * session as they are now (as Spark's broadcast threads do), its jobs
+    * in job `group`, interrupt on cancel, keeping the job description.
+    */
+  def inJobGroup[T](spark: SparkSession, pool: ExecutorService,
+      group: String)(body: => T): CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+        spark.asInstanceOf[classic.SparkSession], pool) {
+      val sc = spark.sparkContext
+      sc.setJobGroup(group, sc.getLocalProperty(
+        SparkContext.SPARK_JOB_DESCRIPTION), interruptOnCancel = true)
+      body
+    }
 
   /** `Observation.getOrEmpty` is `private[sql]`; the public `get`
     * blocks forever if the observed action's listener never fires —

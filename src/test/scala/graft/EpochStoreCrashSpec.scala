@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{IncrementalDedupStream, PipelineStream}
+import graft.streaming.{EpochStore, IncrementalDedupStream, PipelineStream}
 
 /** A crash at any write boundary inside an epoch replays to the same
   * output and store. Each case runs the epochs once, uninterrupted,
@@ -211,4 +211,26 @@ class EpochStoreCrashSpec extends AnyFunSuite {
       (out, keys("md5"), keys("ph"), sums)
     }
   }
+
+  test("an epoch overwrite replaces the whole epoch, also when the new " +
+      "rows are empty or cover other partitions") {
+    val dir = Files.createTempDirectory("epoch-overwrite").toString
+    val sess = spark; import sess.implicits._
+    def plant(batchId: Long, hp: Long, h: String): Unit =
+      Seq(h).toDF("h").write.mode("append")
+        .parquet(s"$dir/batch_id=$batchId/hp=$hp")
+    def contents = spark.read.parquet(dir)
+      .select(col("batch_id").cast("long"), col("hp").cast("long"), col("h"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    plant(5, 1, "kept")
+    plant(6, 7, "stale")
+    EpochStore.overwrite(Seq.empty[(String, Long)].toDF("h", "hp"), dir, 6,
+      "hp")
+    assert(contents == Set((5L, 1L, "kept")))
+    plant(6, 7, "stale")
+    EpochStore.overwrite(Seq(("new", 3L)).toDF("h", "hp"), dir, 6, "hp")
+    assert(contents == Set((5L, 1L, "kept"), (6L, 3L, "new")))
+    deleteTree(java.nio.file.Paths.get(dir))
+  }
 }
+

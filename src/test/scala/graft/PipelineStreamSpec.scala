@@ -217,12 +217,16 @@ class PipelineStreamSpec extends AnyFunSuite {
     // curation-passing filler with a doc-unique token every 3rd
     // position (the GenScale splice trick): every 8-token passage
     // window contains a unique token, so no doc near-dups another and
-    // the whole accepted set reaches the packing stage
+    // the whole accepted set reaches the packing stage. Over
+    // PipePackTokens (2048) tokens per doc, so every train doc moves
+    // its shard's later docs to the next bin and a miscounted shard
+    // total shows in `bin`
     def text(i: Long): String = {
       def tag(k: Long) = ('a' + (i % 26)).toChar.toString +
         ('a' + ((i / 26 + k) % 26)).toChar + ('a' + (k % 26)).toChar
-      s"the ${tag(1)} road and the ${tag(2)} mill by the ${tag(3)} gate " +
-        s"near the ${tag(4)} stream in the ${tag(5)} light of ${tag(6)} day"
+      Seq.fill(100)(s"the ${tag(1)} road and the ${tag(2)} mill by the " +
+        s"${tag(3)} gate near the ${tag(4)} stream in the ${tag(5)} " +
+        s"light of ${tag(6)} day").mkString(" ")
     }
     import scala.jdk.CollectionConverters._
     def frame(rows: Seq[(Long, String)]) = spark.createDataFrame(
@@ -256,6 +260,8 @@ class PipelineStreamSpec extends AnyFunSuite {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
           / lit(graft.operators.TextQueries.PipePackTokens)).cast("long"))
     assert(expected.count() > 0, "fixture produced no train docs")
+    assert(expected.select("bin").distinct().count() >= 2,
+      "every doc packed into bin 0: the fold's totals are never read")
     assert(expected.filter(col("bin") =!= col("expected_bin")).count() == 0,
       "sum-folded shard store diverged from the global packing fold")
     // the shard store is actually folded: generations present, early
