@@ -219,23 +219,15 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_RELAY").contains("0")) (0L, 0L, Nil)
       else try {
         val root = java.nio.file.Files.createTempDirectory("bench-relay").toString
-        val ev = graft.Tables.events(spark, sfDir)
-        val nEv = ev.count()
-        val files = math.max(1, math.ceil(nEv / 4096.0).toInt)
-        // EVENT-TIME-ORDERED staging (file i = i-th ts range): the
-        // reference input is an ordered CDC scan (SURVEY A1); random
-        // repartitioning interleaves the full time range into every
-        // file and a multi-trigger run then drops later files as
-        // below-watermark late data (measured: 95k of 1M survived at
-        // sf1/mfpt=32), corrupting the throughput number.
-        ev.repartitionByRange(files, org.apache.spark.sql.functions.col("ts"))
-          .sortWithinPartitions("ts").write.parquet(s"$root/in")
-        graft.Stage.orderStagedFiles(s"$root/in")
+        // event-time-ordered staging (file i = i-th ts range): see
+        // Stage.stageOrdered
+        val (nEv, _) = graft.Stage.stageOrdered(
+          graft.Tables.events(spark, sfDir), "ts", 4096, s"$root/in")
         // Per-trigger file cap: the RelayConfig DEFAULT is the tuned
         // drain setting (256 files/trigger — the measured curve lives
         // in SCALING.md §Relay), so the committed artifact benches the
         // configuration a user gets out of the box. The curve itself is
-        // swept with RelayThroughput's cap argument.
+        // swept with `graft.tools.Probe relay-throughput`'s cap argument.
         val relayReps = math.max(1,
           sys.env.getOrElse("SPARK_GRAFT_RELAY_REPS", "3").toInt)
         // relay_events records the MINIMUM delivered count over the

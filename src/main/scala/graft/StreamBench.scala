@@ -19,7 +19,7 @@ import graft.streaming._
   * stream runs one UNCOUNTED warm-up (the first execution of a stream
   * plan pays its codegen/JIT cost — measured 2.8× slower than warm at
   * small loads, which would dominate any spread statistic) followed by
-  * `SPARK_GRAFT_STREAM_REPS` counted reps (default 3), each with fresh
+  * `SPARK_GRAFT_STREAM_REPS` counted reps (default 5), each with fresh
   * checkpoint/output dirs (a reused checkpoint would resume and
   * measure nothing). The published rate is the MEDIAN, and the
   * per-stream max/min spread over the counted reps ships alongside
@@ -145,34 +145,10 @@ object StreamBench {
     // stall hit a different stream in each closing sweep — sessionize
     // in B at 3 reps, compaction in C at 3 reps, each a single slow
     // rep with no cleaner/GC signature — and the 5-rep trimmed spread
-    // absorbs exactly one stalled rep, which 3 reps cannot). An
-    // explicit SPARK_GRAFT_STREAM_REPS still wins for local loops;
-    // the historical noisy set then keeps its 5-rep floor.
-    val repsWanted = sys.env.get("SPARK_GRAFT_STREAM_REPS")
+    // absorbs exactly one stalled rep, which 3 reps cannot).
+    // SPARK_GRAFT_STREAM_REPS overrides it for every stream alike.
+    val reps = sys.env.get("SPARK_GRAFT_STREAM_REPS")
       .map(_.toInt).getOrElse(5)
-    // streams with a measured spread history above ~1.25 at reps=3
-    // (r14 driver: media_features 1.44, decontaminate 1.37,
-    // incremental_dedup 1.36; r15 closing sweep: ann_serve_batch512
-    // 1.51 — one cold rep on a 6.5 s window): they run 5 counted reps
-    // so the median is anchored and the noise flag can trim one
-    // outlier per side
-    // (r16 sf0.1 sweep: funnel raw spread 2.51 from one cold rep at
-    // reps=3 — same signature as the other four when they joined)
-    // (r16→r17: attribution joined after its unexplained -27% driver
-    // rows/s with raw spread 1.335 at reps=3 and no trim — VERDICT r16
-    // #2; 5 trimmed reps + the extra warm-up decide whether the drop
-    // is protocol noise or real)
-    // (r18 quiet runs: curation joined after its slow-mode
-    // characterization — raw spread 10.04 in run B, a bimodal
-    // ~4s/~28s session-history effect, SCALING.md round 18)
-    // (r19 sweep B: sessionize joined — one rep at 2109 vs 9089 rows/s
-    // with the FEWEST in-window cleanups and flat GC, i.e. the roaming
-    // HOST stall, not a code race; 5 reps + trim absorb one stalled rep)
-    val noisyStreams = Set("media_features", "decontaminate",
-      "incremental_dedup", "ann_serve_batch512", "funnel", "attribution",
-      "curation", "sessionize")
-    def repsFor(name: String): Int =
-      if (noisyStreams(name)) math.max(repsWanted, 5) else repsWanted
     val warmups = sys.env.get("SPARK_GRAFT_STREAM_WARMUP")
       .map(_.toInt).getOrElse(1)
     // decontaminate's FIRST COUNTED rep still ran cold behind a single
@@ -193,38 +169,22 @@ object StreamBench {
     // maxFilesPerTrigger yields several genuine micro-batches; LAZY so
     // a SPARK_GRAFT_STREAMS subset run stages only what it measures.
     // Staged INPUT is shared across reps (read-only); checkpoints and
-    // outputs are per-rep.
-    lazy val ev = Tables.events(spark, sfDir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    lazy val nEv = ev.count()
-    // event-time-ordered staging (file i = i-th ts range), the ordered
-    // CDC input contract — random staging makes every later trigger's
-    // rows below-watermark "late" for the sessionize stream (see the
-    // relay staging note in Bench.scala)
-    lazy val evSchema = {
-      ev.repartitionByRange(math.max(1, math.ceil(nEv / 4096.0).toInt),
-          col("ts"))
-        .sortWithinPartitions("ts").write.parquet(s"$root/events")
-      Stage.orderStagedFiles(s"$root/events")
-      spark.read.parquet(s"$root/events").schema
-    }
-
-    lazy val docs = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("source"), col("text"),
-        // producer-stamped ingest time for the curation watermark:
-        // deterministic, monotone-ish in doc_id
-        timestamp_micros(lit(1700000000000000L) +
-          col("doc_id") * 1000000L).as("ingest_ts"))
-    lazy val nDocs = docs.count()
+    // outputs are per-rep. Events stage in event-time order (file i =
+    // i-th ts range), the ordered CDC input contract (Stage.stageOrdered)
+    lazy val (nEv, evSchema) = Stage.stageOrdered(
+      Tables.events(spark, sfDir)
+        .select("event_id", "ts", "user_id", "event_type", "value"),
+      "ts", 4096, s"$root/events")
     // ingest_ts is monotone in doc_id, so range-stage by doc_id for the
     // same ordered-arrival contract (curation's watermark)
-    lazy val docSchema = {
-      docs.repartitionByRange(math.max(1, math.ceil(nDocs / 1024.0).toInt),
-          col("doc_id"))
-        .sortWithinPartitions("doc_id").write.parquet(s"$root/docs")
-      Stage.orderStagedFiles(s"$root/docs")
-      spark.read.parquet(s"$root/docs").schema
-    }
+    lazy val (nDocs, docSchema) = Stage.stageOrdered(
+      Tables.documents(spark, sfDir)
+        .select(col("doc_id"), col("source"), col("text"),
+          // producer-stamped ingest time for the curation watermark:
+          // deterministic, monotone-ish in doc_id
+          timestamp_micros(lit(1700000000000000L) +
+            col("doc_id") * 1000000L).as("ingest_ts")),
+      "doc_id", 1024, s"$root/docs")
 
     /** Time a stream to completion, `reps` times; `build`/`stateRows`
       * receive the rep index so every checkpoint, store, and output
@@ -251,7 +211,7 @@ object StreamBench {
         var gcMsInWin = 0L
         val probe = org.apache.spark.graft.CleanerProbe
           .attach(spark.sparkContext)
-        for (rep <- 0 until warmupsFor(name) + repsFor(name)) {
+        for (rep <- 0 until warmupsFor(name) + reps) {
           val counted = rep >= warmupsFor(name)
           // Per-rep cleaner drain (round-18 slow-mode fix candidate):
           // quiesce the previous rep's checkpoint/shuffle/broadcast

@@ -1225,7 +1225,6 @@ object RelationalQueries {
             (lit(teleport) +
               expr("(85 * coalesce(inflow, CAST(0 AS BIGINT))) div 100"))
               .as("r"))
-        graft.Stage.maybeExplain("rel_pagerank round", next)
         ranks = next.checkpoint()
       }
       ranks.orderBy(desc("r"), asc("node")).limit(20)

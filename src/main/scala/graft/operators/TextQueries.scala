@@ -34,7 +34,7 @@ object TextQueries {
     * the digest cost itself across the millions of per-gram
     * evaluations in the dedup pipelines.
     */
-  private[graft] def h60(c: Column): Column = call_function("md5_top60", c)
+  private def h60(c: Column): Column = call_function("md5_top60", c)
 
   private def h60Sql(e: String): String =
     s"CAST(('0x' || substr(md5($e), 1, 15)) AS BIGINT)"
@@ -161,13 +161,13 @@ object TextQueries {
     * signature cost. All operands stay < 2^62, so the arithmetic is
     * ANSI-overflow-safe in Spark and exactly mirrored in DuckDB BIGINT.
     */
-  private[graft] val MinhashP = 2147483647L
+  private val MinhashP = 2147483647L
   private val MinhashA = Seq(1103515245L, 1299709L, 15485863L, 32452843L,
     49979687L, 67867967L, 86028121L, 104395301L)
   private val MinhashB = Seq(12345L, 67890L, 111111L, 222222L,
     333333L, 444444L, 555555L, 666666L)
 
-  private[graft] def perm(i: Int, h: Column): Column =
+  private def perm(i: Int, h: Column): Column =
     ((h % MinhashP) * MinhashA(i) + MinhashB(i)) % MinhashP
 
   private def permSql(i: Int, h: String): String =
@@ -730,32 +730,35 @@ object TextQueries {
     // neardupPairs flat-join shape: per-doc gram arrays grow with doc
     // length and an 8 MB array cell is an executor-memory hazard the
     // flat relation doesn't have.
-    val docgr = docGramBlocks(g8Hashes(s, d), doc4Arrays(s, d))
+    val docs = documents(s, d)
+    val docgr = jaccardBlocks(gramHashes(docs, 8, "gh8"),
+      gramArrays(docs, length(col("text")).as("len")))
     // stage docgr (|docs| rows): a broadcast self-join cannot reuse the
     // build side's exchange, so without staging the whole gram pipeline
     // runs once per side. The scored pair relation is materialized slim
     // (arrays dropped, intersections done) BEFORE the jaccard cut so
     // the filter cannot be pushed into the join condition — where it
     // would re-evaluate array_intersect two more times per pair.
-    val pairs = graft.Stage.fanout(docgr)(ngramPairsBuild)
+    val pairs = graft.Stage.fanout(docgr)(blockedPairs("dedup_ngram_jaccard"))
     ngramPairsScore(pairs)
   }
 
   /** Blocked candidate generation + array-intersect verification over a
-    * staged docgr relation (doc_id, len, ghs, n, block) — the fan-out
-    * body of [[ngramJaccardCore]], factored so the composite
-    * retrievalAgreement can run it over a shared staged relation.
+    * staged docgr relation (doc_id, ghs, n, block, …) — the fan-out body
+    * of [[ngramJaccardCore]] and [[containmentCore]], and of the
+    * composite retrievalAgreement over its shared staged relation.
+    * `op` names the operator in the degenerate-block cap's log line.
     */
-  private def ngramPairsBuild(dg: DataFrame): DataFrame = {
+  private def blockedPairs(op: String)(dg: DataFrame): DataFrame = {
     // degenerate-block cap: see DegenerateBlockCap/cappedBlocks
-    val okBlocks = cappedBlocks(dg, "dedup_ngram_jaccard")
+    val okBlocks = cappedBlocks(dg, op)
     val slim = dg.select(col("doc_id"), col("block"), col("n"))
       .join(okBlocks, "block")
     val cand = slim.as("x").join(slim.as("y"),
         col("x.block") === col("y.block") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
         col("x.n").as("na"), col("y.n").as("nb"))
-    val verified = cand
+    cand
       .join(dg.select(col("doc_id").as("ida"), col("ghs").as("ghs_a")),
         col("doc_a") === col("ida"))
       .join(dg.select(col("doc_id").as("idb"), col("ghs").as("ghs_b")),
@@ -764,8 +767,6 @@ object TextQueries {
         call_function("sorted_intersect_count",
           col("ghs_a"), col("ghs_b"))
           .as("n_common"))
-    graft.Stage.maybeExplain("dedup_ngram_jaccard verify stage", verified)
-    verified
   }
 
   private def ngramPairsScore(pairs: DataFrame): DataFrame =
@@ -775,19 +776,23 @@ object TextQueries {
           (col("na") + col("nb") - col("n_common"))).as("jaccard"))
       .filter(col("jaccard") >= 0.6)
 
-  /** Hashed char-8-grams, one row per (doc, distinct gram) — ONE md5
-    * pass serving both the blocking minima (ngramJaccard) and the
-    * rare-gram posting lists (rareGramRetrieval).
+  /** (doc_id, `carry`…, `hash`): one row per distinct char-`n`-gram
+    * of each document's text, hashed with [[h60]]. `carry` columns are
+    * computed from the document row alongside the explode. The gram
+    * column is named as in the oracle SQL (`g` for 4-grams, `g8` for
+    * 8-grams).
     */
-  private def g8Hashes(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
-          .as("g8"))
-      .select(col("doc_id"), h60(col("g8")).as("gh8"))
+  private[graft] def gramHashes(docs: DataFrame, n: Int, hash: String = "gh",
+      carry: Seq[Column] = Nil): DataFrame = {
+    val g = if (n == 4) "g" else s"g$n"
+    val grams = docs.select(col("doc_id") +: carry :+ explode(
+      call_function("char_ngrams", col("text"), lit(n), lit(true))).as(g): _*)
+    grams.select(grams.columns.toSeq.init.map(col) :+ h60(col(g)).as(hash): _*)
+  }
 
-  /** Per-doc char-4-gram hash arrays + sizes — ONE md5 pass serving
-    * both pipelines' exact-J4 verification.
+  /** Per-doc char-4-gram hash arrays: (doc_id, `carry`…, ghs, n), the
+    * sorted DISTINCT hashes and their count — the exact-J4 verify input
+    * of every near-dup pipeline.
     *
     * collect_set, not collect_list: the intersection count and the
     * per-doc size `n` must BOTH count DISTINCT hashes or a within-doc
@@ -802,32 +807,44 @@ object TextQueries {
     * so the sort amortizes. Counts are identical on sorted distinct
     * arrays, so jaccard and the oracle comparison are unchanged.
     */
-  private def doc4Arrays(s: SparkSession, d: String): DataFrame =
-    documents(s, d)
-      .select(col("doc_id"), length(col("text")).as("len"),
-        explode(call_function("char_ngrams", col("text"), lit(4), lit(true)))
-          .as("g"))
-      .select(col("doc_id"), col("len"), h60(col("g")).as("gh"))
-      .groupBy("doc_id", "len")
+  private[graft] def gramArrays(docs: DataFrame, carry: Column*): DataFrame = {
+    val hashes = gramHashes(docs, 4, carry = carry)
+    hashes.groupBy(hashes.columns.toSeq.init.map(col): _*)
       .agg(sort_array(collect_set(col("gh"))).as("ghs"))
       .withColumn("n", size(col("ghs")).cast("bigint"))
+  }
 
-  /** The blocking-dedup docgr relation: per-doc gram arrays + the
-    * (length bucket, two 8-gram minima) blocking key. The second,
-    * independent min comes from an affine permutation of the SAME
-    * 60-bit hash (one-hash minhash, see MinhashP) — one md5 per gram
-    * instead of two.
+  /** dedup_ngram_jaccard's blocking key on `docs` (doc_id, len, …):
+    * the length bucket plus two minima of the doc's 8-gram hashes `g8`
+    * (doc_id, gh8). The second, independent min comes from an affine
+    * permutation of the SAME 60-bit hash (one-hash minhash, see
+    * MinhashP) — one md5 per gram instead of two.
     */
-  private def docGramBlocks(g8: DataFrame, doc4: DataFrame): DataFrame = {
-    val blocks = g8.groupBy("doc_id")
+  private[graft] def jaccardBlocks(g8: DataFrame, docs: DataFrame): DataFrame = {
+    val minima = g8.groupBy("doc_id")
       .agg(min(col("gh8")).as("min_bh"),
         min(((col("gh8") % MinhashP) * lit(179424673L) + lit(777777L))
           % MinhashP).as("min_bh2"))
-    doc4.join(blocks, "doc_id")
+    docs.join(minima, "doc_id")
       // floor-divide explicitly: a bare cast would truncate here but
       // ROUND in DuckDB, splitting blocks differently across engines
       .withColumn("block", concat_ws("_", floor(col("len") / 50).cast("int"),
         col("min_bh"), col("min_bh2")))
+  }
+
+  /** dedup_containment's blocking key on `docs` (doc_id, …): the raw
+    * minimum of the doc's 8-gram hashes `g8` (doc_id, bh) plus three
+    * one-hash minhash permutation minima, no length bucket.
+    */
+  private[graft] def containmentBlocks(g8: DataFrame, docs: DataFrame): DataFrame = {
+    val minima = g8.groupBy("doc_id")
+      .agg(min(col("bh")).as("min_bh"),
+        min(perm(0, col("bh"))).as("min_p0"),
+        min(perm(1, col("bh"))).as("min_p1"),
+        min(perm(2, col("bh"))).as("min_p2"))
+    docs.join(minima, "doc_id")
+      .withColumn("block", concat_ws("_", col("min_bh"),
+        col("min_p0"), col("min_p1"), col("min_p2")))
   }
 
   val ngramJaccardSql: String = {
@@ -1582,37 +1599,19 @@ object TextQueries {
   // of a doc whose text shares only one sub-cap gram with its copy
   // when the rest crossed the df cap.
   // -------------------------------------------------------------------
-  def incrementalNear(s: SparkSession, d: String): DataFrame =
-    incrementalNearSplit(s, d,
-      col("doc_id") < 400,
-      col("doc_id") >= 400 || col("doc_id") < 50)
-
-  /** [[incrementalNear]] with a caller-chosen corpus/batch split — the
-    * registered query fixes the dedup_incremental split; the decade
-    * probe (tools/IncNearDecadeProbe) inverts it so the batch stays
-    * FIXED while the corpus grows, isolating the batch-proportional
-    * probe cost from the corpus-proportional (one-off, amortized in a
-    * deployment) index build.
-    */
-  private[graft] def incrementalNearSplit(s: SparkSession, d: String,
-      corpusPred: Column, batchPred: Column): DataFrame = {
+  def incrementalNear(s: SparkSession, d: String): DataFrame = {
     val docs = documents(s, d)
-    val corpus = docs.filter(corpusPred)
-    val batch = docs.filter(batchPred)
-    def gram8(df: DataFrame): DataFrame = df
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
-          .as("g8"))
-      .select(col("doc_id"), h60(col("g8")).as("gh"))
+    val corpus = docs.filter(col("doc_id") < 400)
+    val batch = docs.filter(col("doc_id") >= 400 || col("doc_id") < 50)
     // the corpus posting relation fans out (df count + capped index) —
     // stage it; the batch side streams through unpersisted
-    val cand = graft.Stage.fanout(gram8(corpus)) { cp =>
+    val cand = graft.Stage.fanout(gramHashes(corpus, 8)) { cp =>
       val rare = cp.groupBy("gh").agg(count(lit(1)).as("df"))
         .filter(col("df") <= RareGramDfCap)
         .select("gh")
       val idx = cp.join(rare, "gh")
         .select(col("gh"), col("doc_id").as("corpus_doc"))
-      incNearCandProbe(s, gram8(batch), idx)
+      incNearCandProbe(s, gramHashes(batch, 8), idx)
     }
     // exact-J4 verify over candidate docs only, reusing the rare-gram
     // verify body under its doc_a/doc_b contract (doc_a = batch side)
@@ -1621,25 +1620,15 @@ object TextQueries {
     val candDocs = candAb.select(col("doc_a").as("doc_id"))
       .unionByName(candAb.select(col("doc_b").as("doc_id")))
       .distinct()
-    val g4raw = docs
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(4), lit(true)))
-          .as("g"))
-      .select(col("doc_id"), h60(col("g")).as("gh"))
-      // distinct hashes (see doc4Arrays): n must agree with what
-      // array_intersect counts, and with the oracle's DISTINCT g4 CTE
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(col("gh"))).as("ghs"))
-      .withColumn("n", size(col("ghs")).cast("bigint"))
-    val verified = graft.Stage.fanout(g4raw)(rareVerifyBuild(candAb))
+    val g4 = gramArrays(docs.join(candDocs, Seq("doc_id"), "left_semi"))
+    val verified = graft.Stage.fanout(g4)(rareVerifyBuild(candAb))
     verified
       .select(col("doc_a").as("batch_doc"), col("doc_b").as("corpus_doc"),
         col("n_rare_shared"), col("jaccard"))
       .orderBy("batch_doc", "corpus_doc")
   }
 
-  /** The batch-probe side of [[incrementalNearSplit]]'s candidate
+  /** The batch-probe side of [[incrementalNear]]'s candidate
     * stage — `batch8` (doc_id, gh) probes the df-capped corpus posting
     * index `idx` (gh, corpus_doc), keeping each batch doc's top-K
     * candidates. Factored out so HeapGateSpec can pin the conf-driven
@@ -2584,47 +2573,9 @@ object TextQueries {
     * composites (dedup_agreement) can consume the relation directly.
     */
   private[operators] def containmentCore(s: SparkSession, d: String): DataFrame = {
-    val grams = documents(s, d)
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(4), lit(true)))
-          .as("g"))
-      .select(col("doc_id"), h60(col("g")).as("gh"))
-    val blocks = documents(s, d)
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
-          .as("g8"))
-      .select(col("doc_id"), h60(col("g8")).as("bh"))
-      .groupBy("doc_id")
-      .agg(min(col("bh")).as("min_bh"),
-        min(perm(0, col("bh"))).as("min_p0"),
-        min(perm(1, col("bh"))).as("min_p1"),
-        min(perm(2, col("bh"))).as("min_p2"))
-    // distinct hashes (see doc4Arrays): na/nb must agree with what
-    // array_intersect counts, and with the oracle's DISTINCT grams CTE
-    val docgr = grams.groupBy("doc_id")
-      .agg(sort_array(collect_set(col("gh"))).as("ghs"))
-      .withColumn("n", size(col("ghs")).cast("bigint"))
-      .join(blocks, "doc_id")
-      .withColumn("block", concat_ws("_", col("min_bh"),
-        col("min_p0"), col("min_p1"), col("min_p2")))
-    val pairs = graft.Stage.fanout(docgr) { dg =>
-      val okBlocks = cappedBlocks(dg, "dedup_containment")
-      val slim = dg.select(col("doc_id"), col("block"), col("n"))
-        .join(okBlocks, "block")
-      val cand = slim.as("x").join(slim.as("y"),
-          col("x.block") === col("y.block") && col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-          col("x.n").as("na"), col("y.n").as("nb"))
-      cand
-        .join(dg.select(col("doc_id").as("ida"), col("ghs").as("ghs_a")),
-          col("doc_a") === col("ida"))
-        .join(dg.select(col("doc_id").as("idb"), col("ghs").as("ghs_b")),
-          col("doc_b") === col("idb"))
-        .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
-          call_function("sorted_intersect_count",
-          col("ghs_a"), col("ghs_b"))
-            .as("n_common"))
-    }
+    val docs = documents(s, d)
+    val docgr = containmentBlocks(gramHashes(docs, 8, "bh"), gramArrays(docs))
+    val pairs = graft.Stage.fanout(docgr)(blockedPairs("dedup_containment"))
     pairs
       .select(col("doc_a"), col("doc_b"), col("na"), col("nb"), col("n_common"),
         (col("n_common").cast("double") / least(col("na"), col("nb")))
@@ -2722,8 +2673,8 @@ object TextQueries {
     * relation directly.
     */
   private[operators] def rareGramCore(s: SparkSession, d: String): DataFrame = {
-    val posts = g8Hashes(s, d).select(col("doc_id"), col("gh8").as("gh"))
-    val cand = graft.Stage.fanout(posts)(rareCandBuild)
+    val docs = documents(s, d)
+    val cand = graft.Stage.fanout(gramHashes(docs, 8))(rareCandBuild)
     // exact verification over candidate docs ONLY: the semi-join keeps
     // the 4-gram hash pass off every non-candidate document; the
     // per-doc gram arrays are staged so the two pair-side joins read
@@ -2737,18 +2688,8 @@ object TextQueries {
     // re-confirms ngramJaccard's round-9 verdict (the flat shape's
     // |cand|×|grams/doc| join intermediate, ~13M rows here, costs more
     // than shipping each candidate doc's array once per pair).
-    val g4raw = documents(s, d)
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(4), lit(true)))
-          .as("g"))
-      .select(col("doc_id"), h60(col("g")).as("gh"))
-      // distinct hashes (see doc4Arrays): n must agree with what
-      // array_intersect counts, and with the oracle's DISTINCT g4 CTE
-      .groupBy("doc_id")
-      .agg(sort_array(collect_set(col("gh"))).as("ghs"))
-      .withColumn("n", size(col("ghs")).cast("bigint"))
-    graft.Stage.fanout(g4raw)(rareVerifyBuild(cand))
+    val g4 = gramArrays(docs.join(candDocs, Seq("doc_id"), "left_semi"))
+    graft.Stage.fanout(g4)(rareVerifyBuild(cand))
   }
 
   /** Rare-gram candidate generation over a staged (doc_id, gh) posting
@@ -2785,8 +2726,8 @@ object TextQueries {
     * gram-array relation (doc_id, ghs, n) — the second fan-out body of
     * [[rareGramCore]], factored for reuse by retrievalAgreement.
     */
-  private def rareVerifyBuild(cand: DataFrame)(g4: DataFrame): DataFrame = {
-    val verified = cand
+  private def rareVerifyBuild(cand: DataFrame)(g4: DataFrame): DataFrame =
+    cand
       .join(g4.select(col("doc_id").as("ida"), col("ghs").as("ghs_a"),
         col("n").as("na")), col("doc_a") === col("ida"))
       .join(g4.select(col("doc_id").as("idb"), col("ghs").as("ghs_b"),
@@ -2799,9 +2740,6 @@ object TextQueries {
         (col("n_common").cast("double") /
           (col("na") + col("nb") - col("n_common"))).as("jaccard"))
       .filter(col("jaccard") >= 0.6)
-    graft.Stage.maybeExplain("dedup_rare_gram verify stage", verified)
-    verified
-  }
 
   val rareGramRetrievalSql: String = {
     val gh = h60Sql("g")
@@ -2879,18 +2817,21 @@ object TextQueries {
       // to disk instead, the cluster answer for memory-tight executors
       val level =
         if (st.serial) StorageLevel.DISK_ONLY else StorageLevel.MEMORY_AND_DISK
-      val g8 = st.persist(g8Hashes(s, d), level)
+      val docs = documents(s, d)
+      val g8 = st.persist(gramHashes(docs, 8, "gh8"), level)
       g8.queryExecution.toRdd.count()
       val candF = st.overlap(st.checkpoint(rareCandBuild(
         g8.select(col("doc_id"), col("gh8").as("gh"))), level))
       // corpus-wide per-doc arrays exist for the blocking side anyway, so
       // the retrieval verify prunes them from cache (left-semi below)
       // instead of re-hashing a pruned parquet scan as standalone does
-      val docgr = st.persist(docGramBlocks(g8, doc4Arrays(s, d)), level)
+      val docgr = st.persist(jaccardBlocks(g8,
+        gramArrays(docs, length(col("text")).as("len"))), level)
       docgr.queryExecution.toRdd.count()
       val cand = candF()
       st.release(g8) // both md5-8 consumers materialized
-      val bPairsF = st.overlap(st.checkpoint(ngramPairsBuild(docgr), level))
+      val bPairsF = st.overlap(st.checkpoint(
+        blockedPairs("dedup_ngram_jaccard")(docgr), level))
       val candDocs = cand.select(col("doc_a").as("doc_id"))
         .unionByName(cand.select(col("doc_b").as("doc_id")))
         .distinct()

@@ -22,7 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * replayed batch recomputes identical survivors and overwrites
   * itself (the relay/AnnStream idempotence contract). The store
   * compacts every `compactEvery` epochs ([[EpochStore.compact]]);
-  * StreamScaleProbe measured 32 part files per epoch uncompacted,
+  * `Probe stream-scale` measured 32 part files per epoch uncompacted,
   * unbounded listing growth at 100 TB.
   *
   * Semantics match the batch operators (NullSafetySpec): within a
@@ -68,11 +68,7 @@ object IncrementalDedupStream {
         "bh", batchId, 1000000L) match {
       case None => hashed0 // no store yet, or every batch hash NULL
       case Some(seen) =>
-        val probed = hashed0.join(seen,
-          col("content_md5") === col("h"), "left_anti")
-        graft.Stage.maybeExplain(
-          s"incremental_dedup store probe, batch $batchId", probed)
-        probed
+        hashed0.join(seen, col("content_md5") === col("h"), "left_anti")
     }
     val survivors = survivors0.persist(StorageLevel.MEMORY_AND_DISK)
     try {

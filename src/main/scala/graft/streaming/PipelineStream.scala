@@ -106,11 +106,7 @@ object PipelineStream {
           "text_md5", batchId, math.max(64L, nBatch)) match {
         case None => canon // no store, or no curated hashes
         case Some(seen) =>
-          val probed = canon.join(seen, col("text_md5") === col("h"),
-            "left_anti")
-          graft.Stage.maybeExplain(
-            s"pipeline md5-store probe, batch $batchId", probed)
-          probed
+          canon.join(seen, col("text_md5") === col("h"), "left_anti")
       }
       val exactKept = exactKept0.persist(StorageLevel.MEMORY_AND_DISK)
       exactKept.queryExecution.toRdd.count()
@@ -147,9 +143,6 @@ object PipelineStream {
             sum(when(col("sph").isNotNull ||
               col("first_doc") < col("doc_id"), 1L).otherwise(0L))
               .as("n_dup"))
-        if (seenPh.isDefined)
-          graft.Stage.maybeExplain(
-            s"pipeline ph-store probe (screen), batch $batchId", screen)
         val hits = ph
           .join(evalSet, col("ph") === col("eph"), "left")
           .groupBy("doc_id")

@@ -15,11 +15,10 @@ import graft.operators.TextQueries
   * would have blown up). Candidate counts across sf0.1 → sf1 → sf10
   * are the direct witness that a blocking key stays ~linear.
   *
-  * Block keys mirror the operators line-for-line (TextQueries
-  * ngramJaccard / containment — same 8-gram minima, same affine
-  * permutations, same length bucket); only the per-block pair count
-  * replaces the pair join, so the tool runs at decades the full
-  * scoring pass would need a cluster for.
+  * The text block keys are the operators' own (TextQueries
+  * jaccardBlocks / containmentBlocks / gramHashes); only the per-block
+  * pair count replaces the pair join, so the tool runs at decades the
+  * full scoring pass would need a cluster for.
   *
   *   sbt "runMain graft.tools.BlockingDiag dir1 [dir2 ...]"
   *
@@ -27,45 +26,20 @@ import graft.operators.TextQueries
   */
 object BlockingDiag {
 
-  /** (doc_id, block) under ngramJaccard's key: floor(len/50) length
-    * bucket + two 8-gram-hash minima (TextQueries.ngramJaccard).
-    */
+  /** (doc_id, block) under dedup_ngram_jaccard's key. */
   def jaccardBlocks(s: SparkSession, d: String): DataFrame = {
     val docs = graft.Tables.documents(s, d)
-    val blocks = docs
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
-          .as("g8"))
-      .select(col("doc_id"), TextQueries.h60(col("g8")).as("bh"))
-      .groupBy("doc_id")
-      .agg(min(col("bh")).as("min_bh"),
-        min(((col("bh") % TextQueries.MinhashP) * lit(179424673L)
-          + lit(777777L)) % TextQueries.MinhashP).as("min_bh2"))
-    docs.select(col("doc_id"), length(col("text")).as("len"))
-      .join(blocks, "doc_id")
-      .select(col("doc_id"),
-        concat_ws("_", floor(col("len") / 50).cast("int"),
-          col("min_bh"), col("min_bh2")).as("block"))
+    TextQueries.jaccardBlocks(TextQueries.gramHashes(docs, 8, "gh8"),
+        docs.select(col("doc_id"), length(col("text")).as("len")))
+      .select("doc_id", "block")
   }
 
-  /** (doc_id, block) under containment's key: raw 8-gram-hash min +
-    * three one-hash minhash permutation minima, no length bucket
-    * (TextQueries.containment).
-    */
+  /** (doc_id, block) under dedup_containment's key. */
   def containmentBlocks(s: SparkSession, d: String): DataFrame = {
-    graft.Tables.documents(s, d)
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
-          .as("g8"))
-      .select(col("doc_id"), TextQueries.h60(col("g8")).as("bh"))
-      .groupBy("doc_id")
-      .agg(min(col("bh")).as("min_bh"),
-        min(TextQueries.perm(0, col("bh"))).as("min_p0"),
-        min(TextQueries.perm(1, col("bh"))).as("min_p1"),
-        min(TextQueries.perm(2, col("bh"))).as("min_p2"))
-      .select(col("doc_id"),
-        concat_ws("_", col("min_bh"),
-          col("min_p0"), col("min_p1"), col("min_p2")).as("block"))
+    val docs = graft.Tables.documents(s, d)
+    TextQueries.containmentBlocks(TextQueries.gramHashes(docs, 8, "bh"),
+        docs.select("doc_id"))
+      .select("doc_id", "block")
   }
 
   /** (doc_id, block) under dedup_rare_gram's inverted index: block =
@@ -76,12 +50,8 @@ object BlockingDiag {
     * exact/blocking-dedup's territory by design).
     */
   def rareGramBlocks(s: SparkSession, d: String): DataFrame =
-    graft.Tables.documents(s, d)
-      .select(col("doc_id"),
-        explode(call_function("char_ngrams", col("text"), lit(8), lit(true)))
-          .as("g8"))
-      .select(col("doc_id"),
-        TextQueries.h60(col("g8")).cast("string").as("block"))
+    TextQueries.gramHashes(graft.Tables.documents(s, d), 8)
+      .select(col("doc_id"), col("gh").cast("string").as("block"))
 
   /** (doc_id, block) under vec_cosine_neardup's key: the FIXED 8-plane
     * sign-LSH bucket (VectorQueries.bucket). Unlike the text families,
@@ -116,60 +86,33 @@ object BlockingDiag {
     graft.operators.VectorQueries.semanticAssigned(s, d)
       .select(col("vec_id").as("doc_id"), col("list_id").cast("string").as("block"))
 
-  /** Semantic-dedup recall at a decade: of all TRUE ≥θ-cosine pairs
-    * (exact N² brute force — diagnostic only, run at decades where
-    * N² dots are tractable locally), the fraction whose two vectors
+  /** Semantic-dedup recall at a decade: of the TRUE ≥θ-cosine ordered
+    * pairs incident to an anchor vector, the fraction whose two vectors
     * land in the same coarse cluster. This is the quality cost of
     * confining the ε-ball search within clusters; SemDeDup accepts it
     * by construction, we MEASURE it per decade so the trade is a
     * number, not a hope. Enabled via SPARK_GRAFT_SEMANTIC_RECALL=1.
+    *
+    * Up to 30,000 vectors every vector is an anchor (the exact N²
+    * ground truth); above that, every ⌈n/2000⌉-th vec_id is, and each
+    * anchor scores against the WHOLE corpus (anchors×N dots, not N²).
+    * Pair-level recall is a mean over pairs; sampling the anchor side
+    * uniformly estimates the same mean, at a resolution of ~1/√pairs.
+    * The row reports the sampling frame it actually applied: the
+    * stride, the corpus size, and the realized anchor count and
+    * coverage (ppm; sparse/offset id spaces make ⌈n/stride⌉ over-promise).
     */
   def semanticRecall(s: SparkSession, d: String, theta: Double): Map[String, Long] = {
-    import graft.Tables.embeddings
-    import graft.operators.VectorQueries.semanticAssigned
-    val a = semanticAssigned(s, d)
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
-    val x = a.select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
-    val y = a.select(col("vec_id").as("vec_y"), col("embedding").as("emb_y"),
-      col("nrm").as("nrm_y"), col("list_id").as("list_y"))
-    // deliberate cartesian (repartitioned for parallelism): ground truth
-    val pairs = x.repartition(32).crossJoin(y)
-      .filter(col("vec_y") < col("vec_id"))
-      .withColumn("sim",
-        call_function("array_dot", col("embedding"), col("emb_y"))
-          / (col("nrm") * col("nrm_y")))
-      .filter(col("sim") >= theta)
-    val r = pairs.agg(
-      count(lit(1)).as("true_pairs"),
-      sum(when(col("list_id") === col("list_y"), 1L).otherwise(0L))
-        .as("same_cluster_pairs")).head()
-    Map("true_pairs" -> r.getAs[Number](0).longValue(),
-      "same_cluster_pairs" -> Option(r.get(1)).map(_.asInstanceOf[Number].longValue()).getOrElse(0L))
-  }
-
-  /** Sampled-anchor cluster-confinement recall for decades where the
-    * full N² ground truth stops being a quick local check: every
-    * ~`targetAnchors` deterministic stride-sampled vectors score
-    * against the WHOLE corpus (anchors×N dots, not N²), and recall is
-    * the same-cluster fraction of the ≥θ pairs incident to an anchor.
-    * Pair-level recall is a mean over pairs; sampling the anchor side
-    * uniformly estimates the same mean — the diagnostic's resolution
-    * is ~1/√pairs, plenty to confirm parity with the small-decade
-    * exact number.
-    */
-  def semanticRecallSampled(s: SparkSession, d: String, theta: Double,
-      targetAnchors: Long): Map[String, Long] = {
     import graft.operators.VectorQueries.semanticAssigned
     val a = semanticAssigned(s, d)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("list_id"))
     val n = a.count()
-    val stride = math.max(1L, n / targetAnchors)
+    val stride = if (n <= 30000) 1L else (n + 1999) / 2000
     val x = a.filter(col("vec_id") % stride === 0).repartition(32)
-    // report the ACTUAL sampled relation size — ceil(n/stride) assumes
-    // dense vec_ids from 0, which sparse/offset id spaces violate
     val nAnchors = x.count()
     val y = a.select(col("vec_id").as("vec_y"), col("embedding").as("emb_y"),
       col("nrm").as("nrm_y"), col("list_id").as("list_y"))
+    // deliberate cartesian (repartitioned for parallelism): ground truth
     val r = x.crossJoin(y)
       .filter(col("vec_y") =!= col("vec_id"))
       .withColumn("sim",
@@ -179,11 +122,6 @@ object BlockingDiag {
       .agg(count(lit(1)).as("true_pairs"),
         sum(when(col("list_id") === col("list_y"), 1L).otherwise(0L))
           .as("same_cluster_pairs")).head()
-    // self-describing sampling frame: the stride ACTUALLY applied, the
-    // corpus size it sampled from, and the realized coverage fraction
-    // (ppm — anchors/corpus, which ceil(n/stride) would over-promise on
-    // sparse/offset id spaces), so a decade recall row can be read
-    // without reproducing the probe's arithmetic
     Map("anchors" -> nAnchors,
       "stride" -> stride,
       "corpus_rows" -> n,
@@ -262,32 +200,20 @@ object BlockingDiag {
       println(s"""{"dir":"$d","family":"$family",$body}""")
     }
     if (sys.env.get("SPARK_GRAFT_SEMANTIC_RECALL").contains("1"))
-      for (d <- dirs if new java.io.File(s"$d/embeddings.parquet").exists()) {
-        val n = spark.read.parquet(s"$d/embeddings.parquet").count()
-        if (n > 30000)
-          // past ~30k vectors the full N² ground truth stops being a
-          // quick local check — switch to the sampled-anchor estimate
-          // (anchors×N dots) so decade recall is still a measurement
-          // 0.7 = the cliff-watch row: recall degrades smoothly from
-          // ~96% (θ=0.9) toward ~41% (θ=0.4); a future retuning of the
-          // dedup threshold must re-read this row before moving below
-          // the near-identical regime (see semanticAssigned's envelope
-          // note)
-          for (theta <- Seq(0.4, 0.7, 0.9)) {
-            val r = semanticRecallSampled(spark, d, theta, 2000L)
-            println(s"""{"dir":"$d","family":"vec_semantic_recall_sampled","theta":$theta,""" +
-              s""""anchors":${r("anchors")},"stride":${r("stride")},"corpus_rows":${r("corpus_rows")},"coverage_ppm":${r("coverage_ppm")},""" +
-              s""""true_pairs":${r("true_pairs")},"same_cluster_pairs":${r("same_cluster_pairs")}}""")
-          }
-        else
-          // 0.4 = the operator's gate threshold (BandedSimThreshold
-          // note); 0.7 = the cliff watch; 0.9 = the production
-          // near-identical pruning regime
-          for (theta <- Seq(0.4, 0.7, 0.9)) {
-            val r = semanticRecall(spark, d, theta)
-            println(s"""{"dir":"$d","family":"vec_semantic_recall","theta":$theta,""" +
-              s""""true_pairs":${r("true_pairs")},"same_cluster_pairs":${r("same_cluster_pairs")}}""")
-          }
+      for (d <- dirs if new java.io.File(s"$d/embeddings.parquet").exists();
+           // 0.4 = the operator's gate threshold (BandedSimThreshold
+           // note); 0.9 = the production near-identical pruning regime;
+           // 0.7 = the cliff-watch row: recall degrades smoothly from
+           // ~96% (θ=0.9) toward ~41% (θ=0.4); a future retuning of the
+           // dedup threshold must re-read this row before moving below
+           // the near-identical regime (see semanticAssigned's envelope
+           // note)
+           theta <- Seq(0.4, 0.7, 0.9)) {
+        val r = semanticRecall(spark, d, theta)
+        val body = Seq("anchors", "stride", "corpus_rows", "coverage_ppm",
+          "true_pairs", "same_cluster_pairs")
+          .map(f => s""""$f":${r(f)}""").mkString(",")
+        println(s"""{"dir":"$d","family":"vec_semantic_recall","theta":$theta,$body}""")
       }
     spark.stop()
   }

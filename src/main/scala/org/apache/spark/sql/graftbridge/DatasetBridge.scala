@@ -98,6 +98,14 @@ object DatasetBridge {
       body
     }
 
+  /** Block until every event posted to `spark`'s listener bus so far
+    * has been delivered (`LiveListenerBus.waitUntilEmpty` is
+    * `private[spark]`): query execution and streaming progress
+    * listeners hear of a finished action asynchronously.
+    */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** `Observation.getOrEmpty` is `private[sql]`; the public `get`
     * blocks forever if the observed action's listener never fires —
     * iterative drivers need the non-blocking probe with a bounded wait

@@ -108,7 +108,7 @@ class CdcRelaySpec extends AnyFunSuite {
 
   test("live profile bounds per-epoch admission to the latency cap") {
     // the latency story's structural half (the measured half lives in
-    // RelayLatencyProbe / SCALING.md §Relay latency): a live relay left
+    // Probe relay-latency / SCALING.md §Relay latency): a live relay left
     // at the unset default must admit at most LiveMaxFilesPerTrigger
     // files per micro-batch, so one slow epoch can never grow into a
     // drain-sized (256-file) batch that holds later events hostage

@@ -25,20 +25,7 @@ class CodegenGateSpec extends AnyFunSuite {
     "text_repetition")
 
   test("codegen-heavy queries run with all codegen fallbacks disabled") {
-    val conf = spark.conf
-    val prevFallback = conf.get("spark.sql.codegen.fallback", "true")
-    val prevFactory = conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-    conf.set("spark.sql.codegen.fallback", "false")
-    conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    try {
-      names.foreach { n =>
-        val df = SparkEntry.queries(n)(spark, sf)
-        // finalize THIS df's plan (AQE included) and execute it fully
-        df.queryExecution.toRdd.count()
-      }
-    } finally {
-      conf.set("spark.sql.codegen.fallback", prevFallback)
-      conf.set("spark.sql.codegen.factoryMode", prevFactory)
-    }
+    val failed = tools.CodegenCheck.failures(spark, sf, names)
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

@@ -53,4 +53,28 @@ class StageOrderingSpec extends AnyFunSuite {
       Stage.orderStagedFiles(new File(dir, "does-not-exist").toString)
     } finally Stage.deleteRecursively(dir)
   }
+
+  test("stageOrdered writes increasing, non-overlapping key ranges in mtime order") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val dir = Files.createTempDirectory("stage-ordered").toFile
+    try {
+      val keys = scala.util.Random.shuffle((1 to 5000).toList)
+      val (n, schema) = Stage.stageOrdered(
+        keys.toDF("k").repartition(7), "k", 400, s"$dir/in")
+      assert(n === 5000L)
+      assert(schema.fieldNames.toSeq === Seq("k"))
+      val files = new File(s"$dir/in").listFiles()
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.lastModified)
+      assert(files.map(_.lastModified).distinct.length === files.length)
+      val ranges = files.toSeq.map { f =>
+        val ks = spark.read.parquet(f.getPath).as[Int].collect().toSeq
+        assert(ks === ks.sorted, s"${f.getName} is not sorted")
+        (ks.head, ks.last, ks.size)
+      }
+      assert(ranges.size > 1)
+      ranges.sliding(2).foreach { case Seq(a, b) => assert(a._2 < b._1) }
+      assert(ranges.map(_._3).sum === 5000)
+    } finally Stage.deleteRecursively(dir)
+  }
 }
