@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import graft.io.LocalFs
+import graft.io.{LocalFileSystem, LocalFs}
 import graft.plans.{AsOfJoinStrategy, GraftExtensions}
 
 /** The one place a session is built and made graft-ready.
@@ -24,9 +24,13 @@ object Session {
 
   /** Make `spark` graft-ready: the native SQL functions of
     * [[GraftExtensions.definitions]], the as-of join planner strategy,
-    * and the fork-free, checksum-verifying [[LocalFs]] for `file:`
-    * checkpoint files (a `fs.AbstractFileSystem.file.impl` other than
-    * Hadoop's default is an explicit choice and is kept). Idempotent.
+    * and fork-free, checksum-verifying `file:` I/O through both of
+    * Hadoop's file APIs: [[LocalFs]] for the FileContext (checkpoint
+    * files; a `fs.AbstractFileSystem.file.impl` other than Hadoop's
+    * default is an explicit choice and is kept) and [[LocalFileSystem]]
+    * for the FileSystem (sink, store and reliable-checkpoint files; an
+    * `fs.file.impl` already set is kept, and a `file:` FileSystem
+    * cached before set-up is replaced). Idempotent.
     */
   def setup(spark: SparkSession): SparkSession = {
     val registry = spark.sessionState.functionRegistry
@@ -39,6 +43,7 @@ object Session {
     val hadoop = spark.sparkContext.hadoopConfiguration
     if (hadoop.get(LocalFs.ImplKey) == LocalFs.HadoopDefault)
       hadoop.set(LocalFs.ImplKey, classOf[LocalFs].getName)
+    LocalFileSystem.install(hadoop)
     spark
   }
 

@@ -4,7 +4,7 @@ import java.net.URI
 import java.nio.file.{FileSystems, Files}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream,
-  FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+  FileStatus, FileSystem, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
@@ -23,7 +23,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   *
   * Hadoop instantiates it reflectively with `(URI, Configuration)`; like
   * Hadoop's `LocalFs` it ignores the URI. `graft.Session.setup` routes
-  * a session's `file:` FileContexts here.
+  * a session's `file:` FileContexts here, and its `file:` FileSystems
+  * to [[LocalFileSystem]], the same raw file system behind Hadoop's
+  * checksummed `FileSystem` API.
   */
 class LocalFs(uri: URI, conf: Configuration)
     extends ChecksumFs(new LocalFs.RawFs(conf)) {
@@ -33,6 +35,45 @@ class LocalFs(uri: URI, conf: Configuration)
     */
   override def open(f: Path): FSDataInputStream =
     open(f, getServerDefaults(f).getFileBufferSize)
+}
+
+/** The `file:` FileSystem that parquet part files, committer
+  * directories, `_SUCCESS` markers, epoch-store partitions and reliable
+  * checkpoints go through: Hadoop's checksummed `LocalFileSystem`, with
+  * its `.crc` sidecars verified on `open`, over the raw file system of
+  * [[LocalFs]], so creates and mkdirs start no `chmod` process.
+  */
+class LocalFileSystem
+    extends org.apache.hadoop.fs.LocalFileSystem(new LocalFs.ForkFreeRawLocalFileSystem)
+
+object LocalFileSystem {
+
+  private val ImplKey = "fs.file.impl"
+
+  /** Route `conf`'s `file:` FileSystems here unless `fs.file.impl` names
+    * another class (an explicit choice, kept).
+    *
+    * `FileSystem.get` caches one `file:` instance per user whatever the
+    * conf names, and a session built elsewhere has cached Hadoop's (or
+    * whatever its service loader finds for `file:`) before set-up runs,
+    * in its checkpoint-dir mkdirs, say. That instance is closed, which
+    * drops it from the cache, and graft's is cached in its place.
+    * Closing also runs its `deleteOnExit` deletions early; in the Spark
+    * 4.1.2 jars only `HiveTempPath` registers any. (`FileSystem.CACHE`
+    * is package-private, and a helper in Hadoop's package would not
+    * reach it from another class loader.)
+    */
+  private[graft] def install(conf: Configuration): Unit = {
+    if (conf.getTrimmed(ImplKey, "").isEmpty)
+      conf.set(ImplKey, classOf[LocalFileSystem].getName)
+    if (conf.get(ImplKey) == classOf[LocalFileSystem].getName) {
+      val cached = FileSystem.get(FsConstants.LOCAL_FS_URI, conf)
+      if (!cached.isInstanceOf[LocalFileSystem]) {
+        cached.close()
+        FileSystem.get(FsConstants.LOCAL_FS_URI, conf): Unit
+      }
+    }
+  }
 }
 
 object LocalFs {

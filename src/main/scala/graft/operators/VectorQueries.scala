@@ -79,9 +79,6 @@ object VectorQueries {
 
   private def norm(c: String): Column = sqrt(dot(c, c))
 
-  private def cosineSql(a: String, b: String): String =
-    s"CASE WHEN round((${dotSql(a, b)}) / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})), 6) = 0 THEN 0.0 ELSE round((${dotSql(a, b)}) / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)})), 6) END"
-
   /** Deterministic pseudo-random hyperplanes shared by Spark and the
     * oracle: component (j,i) = (md5-hash mod 2001 - 1000), used as the
     * integer numerator of m/1000.0. Computed here with MessageDigest —
@@ -2360,35 +2357,6 @@ object VectorQueries {
        |  CAST(sum(CASE WHEN azq > 3000000 THEN 1 ELSE 0 END) AS BIGINT)
        |    AS n_outlier_dims
        |FROM z GROUP BY vec_id ORDER BY vec_id""".stripMargin
-
-  // -------------------------------------------------------------------
-  // diag_decimal38 — the DECIMAL(38,0) class canary (VERDICT r15 #2).
-  // RETIRED from the registry in round 17 (VERDICT r16 #1): the driver
-  // adjudicated the class red in CORRECTNESS_r16 (rows+schema green,
-  // hash red — exactly the r15 reproduction), so the registry row had
-  // delivered its verdict and would stay permanently red. The function
-  // is kept for tools/check.py's DUALREAD_INCLUDE_CANARY leg, which
-  // now synthesizes the same row itself (check.py CANARY_SQL).
-  // One row whose two columns are decimal literals the driver cannot
-  // hash portably IF its two read paths canonicalize DECIMAL(38,0)
-  // differently: d_small = 42 is representable everywhere, and d_big =
-  // 2^53 + 1 = 9007199254740993 is the first integer float64 CANNOT
-  // hold — a reader that renders the oracle's decimal as float64 (as
-  // DuckDB-python .df() does) yields 9007199254740992.0 while pyarrow
-  // reading Spark's parquet yields decimal.Decimal(9007199254740993).
-  // RED here = decimal outputs are unhashable at the driver, the r15
-  // reproduction is driver-proven and the VARCHAR rule (OracleHygiene's
-  // no-decimal-output ban) is load-bearing; GREEN = re-probe with
-  // diag_cov_totals below. This is the ONE sanctioned decimal output
-  // in the registry (exempted by name in OracleHygieneSpec).
-  // -------------------------------------------------------------------
-  def diagDecimal38(s: SparkSession, d: String): DataFrame =
-    s.sql("SELECT CAST(42 AS DECIMAL(38,0)) AS d_small, " +
-      "CAST('9007199254740993' AS DECIMAL(38,0)) AS d_big")
-
-  val diagDecimal38Sql: String =
-    "SELECT CAST('42' AS DECIMAL(38,0)) AS d_small, " +
-      "CAST('9007199254740993' AS DECIMAL(38,0)) AS d_big"
 
   // -------------------------------------------------------------------
   // diag_cov_totals — the sums ladder (VERDICT r15 #3): the covariance

@@ -213,9 +213,10 @@ object Probe {
   private def relayResume(r: Run, args: Seq[String]): Seq[String] = {
     val killFrac = args.headOption.map(_.toDouble).getOrElse(0.5)
     val total = stageEvents(r)
-    // mid-size epochs: the kill lands mid-drain with several epochs
-    // committed, and the crash-replayed epoch is a measurable slice
-    val mfpt = 64
+    // about 8 epochs whatever the scale: the kill lands mid-drain with
+    // several epochs committed, and the crash-replayed epoch is a
+    // measurable slice
+    val mfpt = math.max(1, (stagedFiles(s"${r.root}/in").size + 7) / 8)
     val cfg = RelayConfig(s"${r.root}/in", s"${r.root}/out", s"${r.root}/chk",
       maxFilesPerTrigger = Some(mfpt))
 

@@ -106,14 +106,6 @@ object DatasetBridge {
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
-  /** `Observation.getOrEmpty` is `private[sql]`; the public `get`
-    * blocks forever if the observed action's listener never fires —
-    * iterative drivers need the non-blocking probe with a bounded wait
-    * and a fallback.
-    */
-  def observedOrEmpty(obs: org.apache.spark.sql.Observation): Map[String, Any] =
-    obs.getOrEmpty
-
   /** Bounded LATCH wait for an observation's metrics: the listener
     * completes the observation's internal Promise, so parking on its
     * `future` wakes at delivery instead of polling (a 50 ms sleep loop

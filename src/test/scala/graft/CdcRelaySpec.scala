@@ -457,34 +457,52 @@ class CdcRelaySpec extends AnyFunSuite {
     } finally spark.streams.removeListener(listener)
   }
 
+  // checkpoint, sink part, committer and _SUCCESS files alike
   test("a drain into a file: checkpoint forks no process for its checkpoint files") {
     import graft.io.LocalFs
+    import org.apache.hadoop.fs.{FileSystem, FsConstants}
     val root = Files.createTempDirectory("relay-forks").toString
     val in = s"$root/in"; new java.io.File(in).mkdirs()
     writeManyEvents(in, 40, 1700000000000000L)
     val chk = new java.io.File(s"$root/chk").toURI.toString
+    // as in a session built elsewhere: Hadoop's file: FileSystem is
+    // cached before set-up runs
+    ProcessStarts.cacheHadoopFileSystem(spark)
     val starts = ProcessStarts.during {
       CdcRelay.start(spark, RelayConfig(in, s"$root/out", chk))
         .awaitTermination()
     }
     assert(spark.read.parquet(s"$root/out").count() == 40)
-    val viaCheckpoint = starts.filter(ProcessStarts.hasFrame(_, "CheckpointFileManager"))
-    assert(viaCheckpoint.isEmpty,
-      s"${viaCheckpoint.size} process starts under a CheckpointFileManager")
+    val viaRaw = starts.filter(ProcessStarts.hasFrame(_, "RawLocalFileSystem"))
+    assert(viaRaw.isEmpty,
+      s"${viaRaw.size} process starts under a RawLocalFileSystem")
     // Spark's checkpoint checksums and Hadoop's .crc sidecars stay on
     val state = new java.io.File(s"$root/chk/state/0/0").list().toSet
     assert(state.contains("1.delta.crc"), state.mkString(","))
     assert(state.contains(".1.delta.crc"), state.mkString(","))
+    val (noCrc, parts) = ProcessStarts.withoutCrc(s"$root/out")
+    assert(parts > 0 && noCrc.isEmpty, noCrc.mkString(","))
+    assert(new java.io.File(s"$root/out/_SUCCESS").exists)
     // set-up is idempotent and keeps an explicit choice
     val conf = spark.sparkContext.hadoopConfiguration
+    def cached = FileSystem.get(FsConstants.LOCAL_FS_URI, conf)
+    val installed = cached
+    val fsImpl = conf.get("fs.file.impl")
     assert(conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
     Session.setup(spark)
     assert(conf.get(LocalFs.ImplKey) == classOf[LocalFs].getName)
+    assert(conf.get("fs.file.impl") == fsImpl && (cached eq installed))
     val explicit = "org.apache.hadoop.fs.local.RawLocalFs"
+    val explicitFs = "org.apache.hadoop.fs.LocalFileSystem"
     conf.set(LocalFs.ImplKey, explicit)
+    conf.set("fs.file.impl", explicitFs)
     try {
       Session.setup(spark)
       assert(conf.get(LocalFs.ImplKey) == explicit)
-    } finally conf.set(LocalFs.ImplKey, classOf[LocalFs].getName)
+      assert(conf.get("fs.file.impl") == explicitFs && (cached eq installed))
+    } finally {
+      conf.set(LocalFs.ImplKey, classOf[LocalFs].getName)
+      conf.set("fs.file.impl", fsImpl)
+    }
   }
 }

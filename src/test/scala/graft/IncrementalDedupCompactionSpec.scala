@@ -98,6 +98,37 @@ class IncrementalDedupCompactionSpec extends AnyFunSuite {
     assert(spark.read.parquet(store).select("h").distinct().count() == 9)
   }
 
+  test("epochs through a compaction fork no process for store, sink or " +
+      "committer files, and keep their .crc sidecars") {
+    val root = Files.createTempDirectory("incdedup-forks").toString
+    val in = s"$root/in"; new java.io.File(in).mkdirs()
+    val out = s"$root/out"; val store = s"$root/store"
+    (0 until 5).foreach { b =>
+      StreamFiles.writeOneFile(spark, in, s"b$b.parquet",
+        Seq(Row(Long.box(b * 10L), s"novel-$b"),
+          Row(Long.box(b * 10L + 1), "dup-of-epoch0")), schema)
+    }
+    // as in a session built elsewhere: Hadoop's file: FileSystem is
+    // cached before set-up runs
+    ProcessStarts.cacheHadoopFileSystem(spark)
+    val starts = ProcessStarts.during {
+      val q = IncrementalDedupStream.start(spark,
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .parquet(in), out, store, s"$root/chk", compactEvery = 3)
+      try q.processAllAvailable() finally q.stop()
+    }
+    // epoch 3 folded [0,3) into generation -3, epoch 4 deleted its inputs
+    assert(partIds(store) == Seq(-3L, 3L, 4L))
+    assert(spark.read.parquet(out).count() == 6)
+    val viaRaw = starts.filter(ProcessStarts.hasFrame(_, "RawLocalFileSystem"))
+    assert(viaRaw.isEmpty,
+      s"${viaRaw.size} process starts under a RawLocalFileSystem")
+    Seq(out, store).foreach { dir =>
+      val (noCrc, parts) = ProcessStarts.withoutCrc(dir)
+      assert(parts > 0 && noCrc.isEmpty, noCrc.mkString(","))
+    }
+  }
+
   test("compaction disabled (compactEvery <= 0) keeps the flat layout") {
     val root = Files.createTempDirectory("incdedup-nocompact").toString
     val out = s"$root/out"; val store = s"$root/store"

@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
+import org.apache.hadoop.fs.{FileSystem, FsConstants}
+import org.apache.spark.sql.SparkSession
 
 /** The `jdk.ProcessStart` events (with stack traces) the JVM records
   * while `body` runs, read back from a flight recording.
@@ -37,5 +39,31 @@ object ProcessStarts {
   def onThisThread(events: Seq[RecordedEvent]): Seq[RecordedEvent] = {
     val id = Thread.currentThread.getId
     events.filter(e => Option(e.getThread).exists(_.getJavaThreadId == id))
+  }
+
+  /** Cache Hadoop's own `file:` FileSystem and unset `spark`'s
+    * `fs.file.impl`: the state of a session built elsewhere whose
+    * FileSystem was used before `Session.setup` ran (a benchmark's
+    * checkpoint-dir mkdirs, say).
+    */
+  def cacheHadoopFileSystem(spark: SparkSession): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    FileSystem.get(FsConstants.LOCAL_FS_URI, conf).close()
+    conf.unset("fs.file.impl")
+    val fs = FileSystem.get(FsConstants.LOCAL_FS_URI, conf)
+    // Hadoop's, or whichever `file:` FileSystem its service loader finds
+    assert(!fs.getClass.getName.startsWith("graft."), fs.getClass)
+  }
+
+  /** The parquet files under `dir` that have no `.crc` sidecar, and
+    * how many parquet files there are.
+    */
+  def withoutCrc(dir: String): (Seq[String], Int) = {
+    val walk = Files.walk(Paths.get(dir))
+    val parquet = try walk.iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    finally walk.close()
+    (parquet.filterNot(p => Files.exists(p.resolveSibling(s".${p.getFileName}.crc")))
+      .map(_.toString), parquet.size)
   }
 }
