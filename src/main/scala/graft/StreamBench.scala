@@ -1,462 +1,298 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.spark.graft.CleanerProbe
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.streaming._
+import org.apache.spark.sql.types.StructType
 
-/** Stateful-stream throughput for the bench artifact: drives ALL the
-  * non-relay streams (compaction, attribution, sessionize, funnel,
-  * incremental dedup, sketch, curation, decontaminate, media features,
-  * ANN serving at two loads) over
-  * the sf tables staged as micro-batch files — several triggers each,
-  * the same file-per-source-batch shape the relay bench uses — and
-  * reports rows/sec plus end-of-run state rows. For ann_serve the rate
-  * is QUERIES served per second against the full corpus index, not
-  * ingest throughput.
+import graft.obs.{Cleaner, Progress, Stats}
+import graft.operators.{MultimodalQueries, TextQueries}
+import graft.streaming._
+import graft.streaming.CdcRelay.RelayConfig
+
+/** The stream catalogue and its bench harness. Each [[Entry]] is one
+  * stream over the staged [[Inputs]]: the CDC relay, the stateful and
+  * foreachBatch streams, and ANN serving at two loads. `graft.Bench`
+  * times them all; `graft.tools.Probe` starts its relay and scale
+  * workloads from the same entries.
   *
-  * Rates carry the SAME noise discipline as the batch queries: each
-  * stream runs one UNCOUNTED warm-up (the first execution of a stream
-  * plan pays its codegen/JIT cost — measured 2.8× slower than warm at
-  * small loads, which would dominate any spread statistic) followed by
-  * `SPARK_GRAFT_STREAM_REPS` counted reps (default 5), each with fresh
-  * checkpoint/output dirs (a reused checkpoint would resume and
-  * measure nothing). The published rate is the MEDIAN, and the
-  * per-stream max/min spread over the counted reps ships alongside
-  * it — single-shot rates swung ±17% across otherwise-identical
-  * driver runs (r13's incremental_dedup "regression" was exactly
-  * this) while the controlled sf1→sf10 decade showed the stream
-  * rate-flat.
-  *
-  * State rows come from the state store's own progress metrics for the
-  * flatMapGroupsWithState / watermark-dedup streams (what a cluster
-  * operator watches for unbounded-state leaks), and from the external
-  * store for the foreachBatch streams (hash rows; sketch cells, which
-  * being CONSTANT is the sketch's whole scale story).
+  * Rates carry the batch queries' noise discipline: each stream runs
+  * one uncounted warm-up (a stream plan's first run pays its codegen
+  * and JIT cost, 2.8× slower than warm at small loads) and then
+  * `SPARK_GRAFT_STREAM_REPS` counted reps (default 5, so the trimmed
+  * spread can drop one stalled rep), each in fresh checkpoint, store
+  * and output dirs. The published rate is the median. State rows come
+  * from the state store's progress metrics or the external store.
   */
 object StreamBench {
 
-  /** Median rate over the reps, plus the honesty metadata: rep count,
-    * min/max, and the max/min spread (1.0 = perfectly stable).
-    * `rates` keeps every counted rep so the noise flag can use the
-    * trimmed spread at reps ≥ 5 (see [[trimmedSpread]]).
+  /** Counted-rep rates (rows/s); state rows after the last rep; staged
+    * rows; the fewest a rep delivered (fewer when a watermark dropped
+    * events); ContextCleaner completions and GC ms inside the timed
+    * windows, so a slow rep carries its own diagnosis.
     */
-  final case class StreamStat(
-      rowsPerSec: Double, stateRows: Long,
-      reps: Int, rpsMin: Double, rpsMax: Double,
-      rates: Seq[Double] = Nil,
-      /** ContextCleaner completions that landed INSIDE the counted
-        * timed windows (summed over reps) — the direct observable for
-        * the round-18 "roaming slow mode" hypothesis (async cleanup
-        * draining during a stream's measured window). A slow rep with
-        * zero in-window cleanups exonerates the cleaner; a slow sweep
-        * with thousands convicts it.
-        */
-      cleanupsInWindow: Long = 0L,
-      /** Stop-the-world GC milliseconds inside the counted windows
-        * (summed over reps) — separates cleaner IO from collector
-        * pauses in a slow rep's diagnosis.
-        */
-      gcMsInWindow: Long = 0L) {
-    def spread: Double = if (rpsMin > 0) rpsMax / rpsMin else Double.NaN
-    /** Spread with ONE outlier rep discarded from each end — only
-      * meaningful at reps ≥ 5 (3 surviving observations); below that it
-      * IS the raw spread. More reps widen the raw max/min ratio by
-      * construction (more draws from the same noise distribution), so
-      * the r14 remedy "run the noisy streams at 5 reps" needs the flag
-      * to judge the stable core, not the tails — a single cold-cache or
-      * GC-hit rep shouldn't read as an unstable stream.
-      */
-    def trimmedSpread: Double =
-      if (rates.size >= 5) {
-        val core = rates.sorted.slice(1, rates.size - 1)
-        if (core.head > 0) core.last / core.head else Double.NaN
-      } else spread
+  final case class StreamStat(rates: Seq[Double], stateRows: Long,
+      staged: Long, delivered: Long, cleanupsInWindow: Long,
+      gcMsInWindow: Long) {
+    def rowsPerSec: Double = Stats.median(rates)
+    def reps: Int = rates.size
+    def rpsMin: Double = if (rates.isEmpty) 0.0 else rates.min
+    def rpsMax: Double = if (rates.isEmpty) 0.0 else rates.max
+    def spread: Double = Stats.spread(rates)
+    def trimmedSpread: Double = Stats.trimmedSpread(rates)
   }
 
-  private def median(xs: Seq[Double]): Double = {
-    val s = xs.sorted
-    val n = s.size
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
-  /** Deterministic cleaner drain — the round-18 phase barrier (blind
-    * `gc; sleep 5s; gc`) upgraded to an observed quiescence loop: force
-    * a GC so every unreachable RDD/shuffle/broadcast/checkpoint
-    * reference enqueues, then poll the [[org.apache.spark.graft
-    * .CleanerProbe]] until no cleanup completion lands for `quietMs`
-    * (or `maxWaitMs` expires). The round-18 characterization showed the
-    * slow mode is batch-phase cleanup debt draining DURING a stream's
-    * timed window; a fixed sleep races that drain (5 s sometimes loses
-    * — r18c's incremental_dedup spread 4.18), while quiescence-polling
-    * waits exactly as long as the debt requires and no longer.
-    *
-    * Returns (cleanup completions observed, millis waited) for the
-    * caller's diagnostic line. Degrades to a single `quietMs` sleep
-    * when the context has no cleaner (referenceTracking off) — then
-    * there is no async drain to race either.
+  /** The entries' inputs, staged on first use (a subset run stages only
+    * what it measures), read-only to every rep, deleted on [[close]].
     */
-  def drainCleanerDebt(spark: SparkSession, maxWaitMs: Long = 30000L,
-      quietMs: Long = 1500L): (Long, Long) = {
-    val probe = org.apache.spark.graft.CleanerProbe.attach(spark.sparkContext)
-    System.gc()
-    probe match {
-      case None =>
-        Thread.sleep(quietMs)
-        (0L, quietMs)
-      case Some(c) =>
-        val start = c.total
-        var last = start
-        var quiet = 0L
-        var waited = 0L
-        var secondGc = false
-        while (quiet < quietMs && waited < maxWaitMs) {
-          Thread.sleep(250)
-          waited += 250
-          val now = c.total
-          if (now != last) { last = now; quiet = 0L }
-          else quiet += 250
-          // a second collection once the FIRST wave quiesces catches
-          // reference chains the first GC only made unreachable
-          // (cleaned frames whose children become collectable once the
-          // parent's weak ref is processed); resetting `quiet` keeps
-          // polling until the post-GC wave also quiesces — the old
-          // waited>=2000 trigger never fired inside a 750 ms per-rep
-          // drain and could fire in the same iteration quiescence was
-          // declared in the phase barrier, so the second wave could
-          // still drain inside the timed window (ADVICE r19)
-          if (!secondGc && quiet >= quietMs) {
-            System.gc(); secondGc = true; quiet = 0L
-          }
-        }
-        (last - start, waited)
+  final class Inputs(val spark: SparkSession, val sf: String, prefix: String) {
+    val root: String = Files.createTempDirectory(prefix).toString
+
+    final class Staged(val dir: String, val rows: Long, val schema: StructType) {
+      def stream(maxFilesPerTrigger: Int): DataFrame = spark.readStream
+        .schema(schema).option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .parquet(dir)
     }
-  }
 
-  /** name -> StreamStat. `SPARK_GRAFT_STREAMS` (comma-separated names)
-    * measures a subset — re-measuring one stream after a fix shouldn't
-    * cost the full nine-stream sweep.
-    */
-  def run(spark: SparkSession, sfDir: String): Map[String, StreamStat] = {
-    val onlyStreams = sys.env.get("SPARK_GRAFT_STREAMS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def wanted(name: String): Boolean = onlyStreams.forall(_.contains(name))
-    // Default 5 counted reps for EVERY stream (r19: the roaming host
-    // stall hit a different stream in each closing sweep — sessionize
-    // in B at 3 reps, compaction in C at 3 reps, each a single slow
-    // rep with no cleaner/GC signature — and the 5-rep trimmed spread
-    // absorbs exactly one stalled rep, which 3 reps cannot).
-    // SPARK_GRAFT_STREAM_REPS overrides it for every stream alike.
-    val reps = sys.env.get("SPARK_GRAFT_STREAM_REPS")
-      .map(_.toInt).getOrElse(5)
-    val warmups = sys.env.get("SPARK_GRAFT_STREAM_WARMUP")
-      .map(_.toInt).getOrElse(1)
-    // decontaminate's FIRST COUNTED rep still ran cold behind a single
-    // warm-up (r15 driver: raw spread 2.52, trimmed 1.40 — the closest
-    // stream to the 1.5 gate; every other rep is tight). It pays a
-    // one-off broadcast-stage cost the shared warm-up doesn't fully
-    // absorb, so it gets one extra uncounted epoch. attribution gets
-    // the same treatment while its r16 drop is under diagnosis
-    // (VERDICT r16 #2).
-    def warmupsFor(name: String): Int =
-      if (name == "decontaminate" || name == "attribution") warmups + 1
-      else warmups
-    val out = scala.collection.mutable.Map[String, StreamStat]()
-    val root = java.nio.file.Files.createTempDirectory("bench-streams").toString
-    import spark.implicits._
+    private def staged(df: DataFrame, key: String, rowsPerFile: Int,
+        name: String): Staged = {
+      val (n, schema) = Stage.stageOrdered(df, key, rowsPerFile, s"$root/$name")
+      new Staged(s"$root/$name", n, schema)
+    }
 
-    // stage events and documents once, ~4096 rows per file so
-    // maxFilesPerTrigger yields several genuine micro-batches; LAZY so
-    // a SPARK_GRAFT_STREAMS subset run stages only what it measures.
-    // Staged INPUT is shared across reps (read-only); checkpoints and
-    // outputs are per-rep. Events stage in event-time order (file i =
-    // i-th ts range), the ordered CDC input contract (Stage.stageOrdered)
-    lazy val (nEv, evSchema) = Stage.stageOrdered(
-      Tables.events(spark, sfDir)
-        .select("event_id", "ts", "user_id", "event_type", "value"),
-      "ts", 4096, s"$root/events")
-    // ingest_ts is monotone in doc_id, so range-stage by doc_id for the
-    // same ordered-arrival contract (curation's watermark)
-    lazy val (nDocs, docSchema) = Stage.stageOrdered(
-      Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("source"), col("text"),
-          // producer-stamped ingest time for the curation watermark:
-          // deterministic, monotone-ish in doc_id
-          timestamp_micros(lit(1700000000000000L) +
-            col("doc_id") * 1000000L).as("ingest_ts")),
-      "doc_id", 1024, s"$root/docs")
-
-    /** Time a stream to completion, `reps` times; `build`/`stateRows`
-      * receive the rep index so every checkpoint, store, and output
-      * path is fresh per rep. stateRows reads the finished query
-      * (progress metrics) or the external store, on the FINAL rep. The
-      * timed window closes at processAllAvailable() — the state probe
-      * (which may itself be a full parquet count of an external store)
-      * runs OUTSIDE it, so rows_per_sec is comparable across
-      * foreachBatch and state-store streams.
+    /** The events table in event-time order, ~4096 per file: one file
+      * ≈ one reference source batch (`--event-count-max`).
       */
-    // excludeBuild: for streams whose start() performs a ONE-TIME index
-    // build (ann_serve trains the coarse quantizer and materializes the
-    // assigned corpus before batch 1), the build is deploy-time cost,
-    // not serving cost — charging it to rows/sec would make the rate a
-    // function of how few queries the bench happens to stream. The
-    // build time is printed separately instead of silently dropped.
-    def measure(name: String, rows: => Long, excludeBuild: Boolean = false)(
-        build: Int => StreamingQuery)(
-        stateRows: (StreamingQuery, Int) => Long): Unit =
-      if (wanted(name)) try {
-        val rates = Seq.newBuilder[Double]
-        var lastState = 0L
-        var cleanupsInWin = 0L
-        var gcMsInWin = 0L
-        val probe = org.apache.spark.graft.CleanerProbe
-          .attach(spark.sparkContext)
-        for (rep <- 0 until warmupsFor(name) + reps) {
-          val counted = rep >= warmupsFor(name)
-          // Per-rep cleaner drain (round-18 slow-mode fix candidate):
-          // quiesce the previous rep's checkpoint/shuffle/broadcast
-          // debt BEFORE this rep's timed window opens, so async
-          // cleanup can't race the measurement. Short budget — the
-          // inter-rep debt is one rep's worth, not a batch phase's.
-          if (counted) {
-            val (n, ms) = drainCleanerDebt(spark, maxWaitMs = 8000L,
-              quietMs = 750L)
-            if (n > 0) System.err.println(String.format(
-              java.util.Locale.ROOT,
-              "[bench] %s rep drain: %d cleanups in %d ms", name,
-              n.asInstanceOf[AnyRef], ms.asInstanceOf[AnyRef]))
-          }
-          val cl0 = probe.map(_.total).getOrElse(0L)
-          val gc0 = org.apache.spark.graft.CleanerProbe.gcMillis
-          val tBuild = System.nanoTime()
-          val q = build(rep)
-          val t0 = if (excludeBuild) {
-            System.err.println(String.format(java.util.Locale.ROOT,
-              "[bench] %s rep %d index build %.1f s (excluded from rate)",
-              name, rep.asInstanceOf[AnyRef],
-              ((System.nanoTime() - tBuild) / 1e9).asInstanceOf[AnyRef]))
-            System.nanoTime()
-          } else tBuild
-          val (secs, st) =
-            try {
-              q.processAllAvailable()
-              val elapsed = (System.nanoTime() - t0) / 1e9
-              (elapsed, stateRows(q, rep))
-            } finally q.stop()
-          val clWin = probe.map(_.total).getOrElse(0L) - cl0
-          val gcWin = org.apache.spark.graft.CleanerProbe.gcMillis - gc0
-          if (counted) {
-            rates += rows / secs
-            lastState = st
-            cleanupsInWin += clWin
-            gcMsInWin += gcWin
-            // per-rep diagnosis line: a slow rep must carry its own
-            // evidence — in-window cleaner completions + GC pause time
-            // — so a recurrence of the roaming slow mode is root-caused
-            // from the sweep log instead of re-characterized from
-            // scratch (SCALING.md round 18)
-            System.err.println(String.format(java.util.Locale.ROOT,
-              "[bench] %s rep %.1f rows/s, in-window cleanups %d, gc %d ms",
-              name, (rows / secs).asInstanceOf[AnyRef],
-              clWin.asInstanceOf[AnyRef], gcWin.asInstanceOf[AnyRef]))
-          } else System.err.println(String.format(java.util.Locale.ROOT,
-            "[bench] %s warm-up %.1f rows/s (uncounted)",
-            name, (rows / secs).asInstanceOf[AnyRef]))
-        }
-        val rs = rates.result()
-        out(name) = StreamStat(median(rs), lastState, rs.size, rs.min,
-          rs.max, rs, cleanupsInWin, gcMsInWin)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] stream $name failed: ${e.getMessage}")
-      }
+    lazy val events: Staged = staged(Tables.events(spark, sf), "ts", 4096, "events")
 
-    def storeStateRows(q: StreamingQuery, rep: Int): Long =
-      Option(q.lastProgress).map(_.stateOperators.map(_.numRowsTotal).sum)
-        .getOrElse(0L)
+    /** Documents in doc_id order, ~1024 per file, with a producer
+      * stamped `ingest_ts` monotone in doc_id (curation's watermark).
+      */
+    lazy val docs: Staged =
+      staged(docColumns(Tables.documents(spark, sf)), "doc_id", 1024, "docs")
 
-    // Null-transform calibration stream (VERDICT r16 #6): the same
-    // file-per-micro-batch source and trigger cadence as every real
-    // stream, an identity projection, a noop sink — no state, no
-    // shuffle, no per-row work beyond scan+serialize. Its rows/s is
-    // the host's fixed-cost streaming baseline for the day: cross-day
-    // stream-table movements that track the calibration stream are
-    // host drift and can be normalized out; movements that don't are
-    // real. Runs first so the baseline is measured under the same
-    // session state every real stream inherits.
-    measure("calibration", nEv) { rep =>
-      spark.readStream.schema(evSchema)
-        .option("maxFilesPerTrigger", 8).parquet(s"$root/events")
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$root/calib_chk$rep")
-        .outputMode("append").start()
-    }((_, _) => 0L)
+    /** The event streams' columns, 8 files per trigger. */
+    def eventStream(): DataFrame = events.stream(8)
+      .select("event_id", "ts", "user_id", "event_type", "value")
 
-    measure("compaction", nEv) { rep =>
-      CompactionStream.start(
-        spark.readStream.schema(evSchema)
-          .option("maxFilesPerTrigger", 8).parquet(s"$root/events")
-          .as[CompactionStream.Event],
-        s"$root/compact_out$rep", s"$root/compact_chk$rep")
-    }(storeStateRows)
+    def docStream(): DataFrame = docs.stream(2)
 
-    measure("attribution", nEv) { rep =>
-      AttributionStream.start(
-        spark.readStream.schema(evSchema)
-          .option("maxFilesPerTrigger", 8).parquet(s"$root/events")
-          .as[AttributionStream.Event],
-        s"$root/attr_out$rep", s"$root/attr_chk$rep")
-    }(storeStateRows)
+    private def docColumns(d: DataFrame): DataFrame =
+      d.select(col("doc_id"), col("source"), col("text"),
+        timestamp_micros(lit(1700000000000000L) + col("doc_id") * 1000000L)
+          .as("ingest_ts"))
 
-    measure("sessionize", nEv) { rep =>
-      SessionizeStream.sessions(
-        spark.readStream.schema(evSchema)
-          .option("maxFilesPerTrigger", 8).parquet(s"$root/events")
-          .select(col("user_id"), col("ts")).as[SessionizeStream.Event])
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$root/sess_chk$rep")
-        .outputMode("append").start()
-    }(storeStateRows)
+    /** One more file of 1024 documents for a restart, ids shifted past
+      * the staged range under the staged name (another name would read
+      * as a null doc_id: an empty batch).
+      */
+    def appendDocs(): Unit =
+      docColumns(Tables.documents(spark, sf)
+          .withColumn("doc_id", col("doc_id") + lit(10000000L)))
+        .limit(1024).coalesce(1).write.mode("append").parquet(docs.dir)
 
-    measure("funnel", nEv) { rep =>
-      FunnelStream.stages(
-        spark.readStream.schema(evSchema)
-          .option("maxFilesPerTrigger", 8).parquet(s"$root/events")
-          .select(col("user_id"), col("ts"), col("event_type"))
-          .as[FunnelStream.Event])
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$root/funnel_chk$rep")
-        .outputMode("append").start()
-    }(storeStateRows)
+    /** One more file of 4096 events, ids shifted past the staged range. */
+    def appendEvents(): Unit =
+      Tables.events(spark, sf).limit(4096)
+        .withColumn("event_id", col("event_id") + lit(100000000L))
+        .coalesce(1).write.mode("append").parquet(events.dir)
 
-    measure("incremental_dedup", nDocs) { rep =>
-      IncrementalDedupStream.start(spark,
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 2).parquet(s"$root/docs")
-          .select("doc_id", "text"),
-        s"$root/incdedup_out$rep", s"$root/incdedup_store$rep",
-        s"$root/incdedup_chk$rep")
-    }((_, rep) => spark.read.parquet(s"$root/incdedup_store$rep").count())
-
-    measure("sketch", nDocs) { rep =>
-      SketchStream.start(spark,
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 2).parquet(s"$root/docs")
-          .select("text"),
-        s"$root/sketch_out$rep", s"$root/sketch_chk$rep")
-    }((_, _) => graft.functions.CountMin.Agg.zero.length.toLong) // constant cells
-
-    measure("curation", nDocs) { rep =>
-      CurationStream.curated(
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 2).parquet(s"$root/docs"))
-        .writeStream.format("noop")
-        .option("checkpointLocation", s"$root/cur_chk$rep")
-        .outputMode("append").start()
-    }(storeStateRows)
-
-    // the COMPOSED curation DAG as one exactly-once stream (the
-    // production shape train_pipeline_e2e batches): curation →
-    // incremental exact dedup → prior-only near-dup screen →
-    // decontamination → split/shard → cross-epoch packing; rate is
-    // docs ingested per second through the WHOLE pipeline. State =
-    // verdict rows committed (one per ingested doc).
-    measure("pipeline", nDocs) { rep =>
-      PipelineStream.start(spark,
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 2).parquet(s"$root/docs"),
-        sfDir, s"$root/pipe_out$rep", s"$root/pipe_store$rep",
-        s"$root/pipe_chk$rep")
-    }((_, rep) => spark.read.parquet(s"$root/pipe_out$rep/docs").count())
-
-    // Resident state here is the STATIC eval-set cache — bounded by the
-    // benchmark corpus, not the crawl; there is no keyed state store
-    // (DecontaminateStreamSpec pins that under a two-era replay). The
-    // probe used to count the OUTPUT sink, which read as unbounded
-    // "state" growth when it is simply the product.
-    lazy val evalHashRows = graft.operators.TextQueries
-      .passageHashes(Tables.documents(spark, sfDir)
-        .filter(col("doc_id") % 13 === 0), stride = 1)
-      .select("ph").distinct().count()
-    measure("decontaminate", nDocs) { rep =>
-      DecontaminateStream.start(spark,
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 2).parquet(s"$root/docs")
-          .select("doc_id", "text"),
-        sfDir, s"$root/decon_out$rep", s"$root/decon_chk$rep")
-    }((_, _) => evalHashRows)
-
-    measure("media_features", nDocs) { rep =>
-      MediaFeatureStream.start(
-        spark.readStream.schema(docSchema)
-          .option("maxFilesPerTrigger", 2).parquet(s"$root/docs")
-          .select(
-            col("doc_id").as("media_id"),
-            element_at(array(lit("png"), lit("jpeg"), lit("wav")),
-              (col("doc_id") % 3 + 1).cast("int")).as("format"),
-            col("text").cast("binary").as("content"),
-            (lit(64) + (col("doc_id") % 8) * 16).cast("int").as("width"),
-            (lit(48) + (col("doc_id") % 5) * 16).cast("int").as("height"),
-            (lit(1) + col("doc_id") % 30).cast("int").as("n_frames"))
-          .as[graft.operators.MultimodalQueries.MediaIn],
-        s"$root/media_out$rep", s"$root/media_chk$rep")
-    }(storeStateRows) // stateless map stream: no store, sink = product
-
-    // ANN serving, measured at BOTH of its regimes:
-    //
-    //   - ann_serve: the historical 64-query trickle (8 queries per
-    //     micro-batch). At this load EVERY serving path is bound by the
-    //     ~1 s/micro-batch scheduling + sink + commit floor, so the row
-    //     tracks round-over-round overhead drift, not index quality.
-    //   - ann_serve_batch512: 512 queries in ONE micro-batch — the
-    //     designed operating point, where per-query compute dominates
-    //     and the cell-confined index's advantage over brute force is
-    //     visible (measured 3.2× at 200k×64; advantage linear in corpus
-    //     size). This is the number that answers "how fast does it
-    //     serve", and it lives in the committed artifact rather than
-    //     only in SCALING.md.
-    //
-    // SPARK_GRAFT_ANN_QUERIES overrides the trickle load;
-    // SPARK_GRAFT_ANN_NPROBE=0 selects the brute path for A/Bs
-    // (SCALING.md §ANN serving crossover).
-    lazy val annNprobe = sys.env.get("SPARK_GRAFT_ANN_NPROBE")
-      .map(_.toInt).getOrElse(AnnStream.DefaultNprobe)
-    // (staged row count, staged schema) — the build closures reference
-    // the SCHEMA, so forcing it stages the files before the first
-    // readStream (the count alone is a by-name `measure` arg evaluated
-    // only after the run)
-    def stageQueries(tag: String, n: Int, files: Int)
-        : (Long, org.apache.spark.sql.types.StructType) = {
-      val qs = Tables.embeddings(spark, sfDir)
-        .filter(col("vec_id") < n)
+    private def annQueries(tag: String, n: Int, files: Int): Staged = {
+      val dir = s"$root/queries_$tag"
+      Tables.embeddings(spark, sf).filter(col("vec_id") < n)
         .select(col("vec_id").as("q_id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-            .as("q_embedding"))
-      qs.repartition(files).write.parquet(s"$root/queries_$tag")
-      val staged = spark.read.parquet(s"$root/queries_$tag")
-      (staged.count(), staged.schema)
+          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("q_embedding"))
+        .repartition(files).write.parquet(dir)
+      val q = spark.read.parquet(dir)
+      new Staged(dir, q.count(), q.schema)
     }
 
-    lazy val annTrickleQueries = sys.env.get("SPARK_GRAFT_ANN_QUERIES")
-      .map(_.toInt).getOrElse(64)
-    lazy val trickle = stageQueries("trickle", annTrickleQueries, 8)
-    measure("ann_serve", trickle._1, excludeBuild = true) { rep =>
-      AnnStream.start(spark,
-        spark.readStream.schema(trickle._2)
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/queries_trickle"),
-        sfDir, s"$root/ann_out$rep", s"$root/ann_chk$rep", nprobe = annNprobe)
-    }((_, rep) => spark.read.parquet(s"$root/ann_out$rep").count())
+    /** ANN serving's two loads: a 64-query trickle, 8 per micro-batch,
+      * bound by the ~1 s per-micro-batch floor, so it tracks overhead
+      * drift; and 512 queries in one micro-batch, the designed
+      * operating point where per-query compute dominates (fewer at a
+      * tiny sf: whatever exists).
+      */
+    lazy val annTrickle: Staged = annQueries("trickle", 64, 8)
+    lazy val annBatch512: Staged = annQueries("batch512", 512, 1)
 
-    // one file = one micro-batch of 512 queries (the corpus may be
-    // smaller at tiny sf — the staged count is whatever exists)
-    lazy val batch512 = stageQueries("batch512", 512, 1)
-    measure("ann_serve_batch512", batch512._1, excludeBuild = true) { rep =>
-      AnnStream.start(spark,
-        spark.readStream.schema(batch512._2)
-          .option("maxFilesPerTrigger", 1).parquet(s"$root/queries_batch512"),
-        sfDir, s"$root/annb_out$rep", s"$root/annb_chk$rep", nprobe = annNprobe)
-    }((_, rep) => spark.read.parquet(s"$root/annb_out$rep").count())
+    /** decontaminate's resident state: the static eval-set passage
+      * hashes, bounded by the benchmark corpus. It keeps no keyed state,
+      * and its output is the product, not state.
+      */
+    lazy val evalHashRows: Long = TextQueries
+      .passageHashes(Tables.documents(spark, sf).filter(col("doc_id") % 13 === 0),
+        stride = 1)
+      .select("ph").distinct().count()
 
-    Stage.deleteRecursively(new java.io.File(root))
-    out.toMap
+    def rows(dir: String): Long = spark.read.parquet(dir).count()
+
+    def close(): Unit = Stage.deleteRecursively(new File(root))
+  }
+
+  /** One stream. `start(in, dir)` starts it with every checkpoint, store
+    * and output under `dir` (a new dir starts over, the same one
+    * resumes); `input` is the staged rows it consumes; `state` reads its
+    * resident state once it has drained; `delivered` counts what it
+    * delivered where that can fall short of `input`. `excludeBuild`:
+    * `start` builds an index once, a deploy-time cost logged apart and
+    * kept out of the rate. `warmups`: uncounted runs before the reps.
+    */
+  final case class Entry(name: String, input: Inputs => Long,
+      start: (Inputs, String) => StreamingQuery,
+      state: (Inputs, StreamingQuery, String) => Long =
+        (_, q, _) => storeStateRows(q),
+      delivered: Option[(Inputs, String) => Long] = None,
+      excludeBuild: Boolean = false, warmups: Int = 1)
+
+  private def storeStateRows(q: StreamingQuery): Long =
+    Option(q.lastProgress).map(_.stateOperators.map(_.numRowsTotal).sum)
+      .getOrElse(0L)
+
+  private def noop(df: DataFrame, dir: String): StreamingQuery =
+    df.writeStream.format("noop").option("checkpointLocation", s"$dir/chk")
+      .outputMode("append").start()
+
+  /** The relay over the staged events with the `RelayConfig` defaults. */
+  def relayConfig(in: Inputs, dir: String): RelayConfig =
+    RelayConfig(in.events.dir, s"$dir/out", s"$dir/chk")
+
+  /** Scan → envelope → dedup → sink with epoch commits. Its watermark
+    * can drop events, so its rate counts the rows it delivered.
+    */
+  val relay: Entry = Entry("relay", _.events.rows,
+    (in, dir) => CdcRelay.start(in.spark, relayConfig(in, dir)),
+    delivered = Some((in, dir) => in.rows(s"$dir/out")))
+
+  val sessionize: Entry = Entry("sessionize", _.events.rows, (in, dir) =>
+    noop(SessionizeStream.sessions(in.eventStream().select("user_id", "ts")
+      .as(Encoders.product[SessionizeStream.Event])).toDF(), dir))
+
+  val incrementalDedup: Entry = Entry("incremental_dedup", _.docs.rows,
+    (in, dir) => IncrementalDedupStream.start(in.spark,
+      in.docStream().select("doc_id", "text"),
+      s"$dir/out", s"$dir/store", s"$dir/chk"),
+    (in, _, dir) => in.rows(s"$dir/store"))
+
+  /** The composed curation DAG as one exactly-once stream: curation →
+    * exact dedup → prior-only near-dup screen → decontamination →
+    * split/shard → packing. State = committed verdicts, one per doc.
+    */
+  val pipeline: Entry = Entry("pipeline", _.docs.rows,
+    (in, dir) => PipelineStream.start(in.spark, in.docStream(), in.sf,
+      s"$dir/out", s"$dir/store", s"$dir/chk"),
+    (in, _, dir) => in.rows(s"$dir/out/docs"))
+
+  private def annServe(name: String, queries: Inputs => Inputs#Staged): Entry =
+    Entry(name, queries(_).rows, (in, dir) => AnnStream.start(in.spark,
+        queries(in).stream(1), in.sf, s"$dir/out", s"$dir/chk"),
+      (in, _, dir) => in.rows(s"$dir/out"), excludeBuild = true)
+
+  /** In run order. decontaminate and attribution take a second warm-up:
+    * behind one, their first counted rep still ran cold.
+    */
+  val catalogue: Seq[Entry] = Seq(
+    relay,
+    // read → identity → noop: no state, no shuffle, no per-row work
+    // beyond scan and serialize. Its rate is the host's fixed streaming
+    // cost for the day; Bench divides every other rate by it
+    Entry("calibration", _.events.rows,
+      (in, dir) => noop(in.eventStream(), dir), (_, _, _) => 0L),
+    Entry("compaction", _.events.rows, (in, dir) => CompactionStream.start(
+      in.eventStream().as(Encoders.product[CompactionStream.Event]),
+      s"$dir/out", s"$dir/chk")),
+    Entry("attribution", _.events.rows, (in, dir) => AttributionStream.start(
+      in.eventStream().as(Encoders.product[AttributionStream.Event]),
+      s"$dir/out", s"$dir/chk"), warmups = 2),
+    sessionize,
+    Entry("funnel", _.events.rows, (in, dir) => noop(FunnelStream.stages(
+      in.eventStream().select("user_id", "ts", "event_type")
+        .as(Encoders.product[FunnelStream.Event])).toDF(), dir)),
+    incrementalDedup,
+    Entry("sketch", _.docs.rows, (in, dir) => SketchStream.start(in.spark,
+        in.docStream().select("text"), s"$dir/out", s"$dir/chk"),
+      (_, _, _) => graft.functions.CountMin.Agg.zero.length.toLong), // constant cells
+    Entry("curation", _.docs.rows,
+      (in, dir) => noop(CurationStream.curated(in.docStream()), dir)),
+    pipeline,
+    Entry("decontaminate", _.docs.rows, (in, dir) => DecontaminateStream.start(
+        in.spark, in.docStream().select("doc_id", "text"), in.sf,
+        s"$dir/out", s"$dir/chk"),
+      (in, _, _) => in.evalHashRows, warmups = 2),
+    Entry("media_features", _.docs.rows, (in, dir) => MediaFeatureStream.start(
+      in.docStream().select(
+          col("doc_id").as("media_id"),
+          element_at(array(lit("png"), lit("jpeg"), lit("wav")),
+            (col("doc_id") % 3 + 1).cast("int")).as("format"),
+          col("text").cast("binary").as("content"),
+          (lit(64) + (col("doc_id") % 8) * 16).cast("int").as("width"),
+          (lit(48) + (col("doc_id") % 5) * 16).cast("int").as("height"),
+          (lit(1) + col("doc_id") % 30).cast("int").as("n_frames"))
+        .as(Encoders.product[MultimodalQueries.MediaIn]),
+      s"$dir/out", s"$dir/chk")),
+    annServe("ann_serve", _.annTrickle),
+    annServe("ann_serve_batch512", _.annBatch512))
+
+  /** name → stat for every entry `SPARK_GRAFT_STREAMS` (comma-separated)
+    * names, all when it is unset; a failed stream is logged and left
+    * out. A value naming no entry skips the phase, barrier included.
+    */
+  def run(spark: SparkSession, sf: String): Map[String, StreamStat] = {
+    val only = sys.env.get("SPARK_GRAFT_STREAMS").map(_.split(",").map(_.trim).toSet)
+    val selected = catalogue.filter(e => only.forall(_.contains(e.name)))
+    if (selected.isEmpty) return Map.empty
+    val reps = sys.env.get("SPARK_GRAFT_STREAM_REPS").map(_.toInt).getOrElse(5)
+    // phase barrier: streams timed while the batch phase's cleanup debt
+    // drains run 2-6× slower, nondeterministically (SCALING.md)
+    spark.catalog.clearCache()
+    val (drained, ms) = Cleaner.drain(spark, maxWaitMs = 60000L, quietMs = 2000L)
+    Bench.log("phase barrier: %d cleanups drained in %d ms before the stream phase",
+      drained, ms)
+    val in = new Inputs(spark, sf, "bench-streams")
+    val progress = new Progress(spark)
+    try selected.flatMap { e =>
+      try Some(e.name -> measure(in, progress, e, reps))
+      catch { case t: Throwable =>
+        Bench.log("stream %s failed: %s", e.name, t.getMessage); None }
+    }.toMap
+    finally { progress.close(); in.close() }
+  }
+
+  private def measure(in: Inputs, progress: Progress, e: Entry,
+      reps: Int): StreamStat = {
+    val probe = CleanerProbe.attach(in.spark.sparkContext)
+    def cleanups: Long = probe.map(_.total).getOrElse(0L)
+    val counted = (0 until e.warmups + reps).flatMap { rep =>
+      // the previous rep's debt drains before this window opens
+      if (rep >= e.warmups) {
+        val (n, ms) = Cleaner.drain(in.spark, maxWaitMs = 8000L, quietMs = 750L)
+        if (n > 0) Bench.log("%s rep drain: %d cleanups in %d ms", e.name, n, ms)
+      }
+      val (cl0, gc0) = (cleanups, CleanerProbe.gcMillis)
+      val dir = s"${in.root}/${e.name}/$rep"
+      val tBuild = System.nanoTime()
+      val q = e.start(in, dir)
+      if (e.excludeBuild) Bench.log("%s rep %d index build %.1f s (excluded from rate)",
+        e.name, rep, (System.nanoTime() - tBuild) / 1e9)
+      val (secs, _) = progress.drain(q, if (e.excludeBuild) System.nanoTime() else tBuild)
+      val (clWin, gcWin) = (cleanups - cl0, CleanerProbe.gcMillis - gc0)
+      val delivered = e.delivered.fold(e.input(in))(_(in, dir))
+      if (delivered != e.input(in))
+        Bench.log("%s rep %d delivered %d of %d staged", e.name, rep, delivered, e.input(in))
+      if (rep < e.warmups) {
+        Bench.log("%s warm-up %.1f rows/s (uncounted)", e.name, delivered / secs)
+        None
+      } else {
+        Bench.log("%s rep %.1f rows/s, in-window cleanups %d, gc %d ms",
+          e.name, delivered / secs, clWin, gcWin)
+        Some((delivered / secs, e.state(in, q, dir), delivered, clWin, gcWin))
+      }
+    }
+    StreamStat(counted.map(_._1), counted.last._2, e.input(in),
+      counted.map(_._3).min, counted.map(_._4).sum, counted.map(_._5).sum)
   }
 }

@@ -67,6 +67,15 @@ object VectorQueries {
     (1 to Dim).map(i => s"CAST($a[$i] AS DOUBLE) * CAST($b[$i] AS DOUBLE)")
       .mkString(" + ")
 
+  /** DuckDB cosine of `a` and `b` with norms `na` and `nb`, rounded to 6
+    * places in the fold-proof zero-sign form: `round` keeps IEEE -0.0,
+    * which Spark's round does not (tools/check.py bans `+ 0.0`).
+    */
+  private def cosSql(a: String, b: String, na: String, nb: String): String = {
+    val r = s"round((${dotSql(a, b)}) / ($na * $nb), 6)"
+    s"CASE WHEN $r = 0 THEN 0.0 ELSE $r END"
+  }
+
   private def cosine(a: String, b: String): Column =
     round(dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b))), 6)
 
@@ -134,7 +143,7 @@ object VectorQueries {
   }
 
   val knnBruteForceSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
        |q AS (SELECT embedding AS q_embedding, nrm AS q_nrm FROM be WHERE vec_id = 0)
@@ -213,7 +222,7 @@ object VectorQueries {
   }
 
   val hardNegativesSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
        |q AS (SELECT vec_id AS q_id, label AS q_label,
@@ -237,7 +246,7 @@ object VectorQueries {
   }
 
   val knnMultiSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm FROM embeddings),
        |q AS (SELECT vec_id AS q_id, embedding AS q_embedding, nrm AS q_nrm
@@ -286,7 +295,7 @@ object VectorQueries {
   }
 
   val lshAnnSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding, ($bucketSql) AS bucket,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm
        |            FROM embeddings),
@@ -320,7 +329,7 @@ object VectorQueries {
   }
 
   val cosineNeardupSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.emb_a", "b.emb_b")}) / (a.norm_a * b.norm_b), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.emb_a", "b.emb_b")}) / (a.norm_a * b.norm_b), 6) END"
+    val cos = cosSql("a.emb_a", "b.emb_b", "a.norm_a", "b.norm_b")
     s"""WITH be AS (SELECT vec_id, embedding, ($bucketSql) AS bucket,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm
        |            FROM embeddings),
@@ -415,7 +424,7 @@ object VectorQueries {
   }
 
   val cosineNeardupBandedSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.emb_a", "b.emb_b")}) / (a.norm_a * b.norm_b), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.emb_a", "b.emb_b")}) / (a.norm_a * b.norm_b), 6) END"
+    val cos = cosSql("a.emb_a", "b.emb_b", "a.norm_a", "b.norm_b")
     val slimArms = (0 until BandCount).map { k =>
       s"""SELECT vec_id, $k AS band,
          |  (${bandBucketFullSql(k)}) % CAST(pow(2, p.planes) AS BIGINT) AS bkt
@@ -770,7 +779,7 @@ object VectorQueries {
   }
 
   val semanticDedupSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("x.embedding", "y.emb_y")}) / (x.nrm * y.nrm_y), 6) = 0 THEN 0.0 ELSE round((${dotSql("x.embedding", "y.emb_y")}) / (x.nrm * y.nrm_y), 6) END"
+    val cos = cosSql("x.embedding", "y.emb_y", "x.nrm", "y.nrm_y")
     // assigned is consumed three times (x, y, the final left join) —
     // MATERIALIZED, or DuckDB re-runs the whole unrolled quantizer
     // chain once per consumer (the r12 checker-OOM failure mode).
@@ -836,7 +845,7 @@ object VectorQueries {
   }
 
   val hardNegativesAnnSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     // al (assigned + label) is consumed twice (anchors, scored), so it
     // is the materialization point; `assigned` itself has exactly one
     // consumer (al) and inlines into that one materialization.
@@ -933,9 +942,8 @@ object VectorQueries {
   }
 
   val ivfAnnSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("e.embedding", "q.q_embedding")}) " +
-      s"/ (sqrt(${dotSql("e.embedding", "e.embedding")}) * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("e.embedding", "q.q_embedding")}) " +
-      s"/ (sqrt(${dotSql("e.embedding", "e.embedding")}) * q.q_nrm), 6) END"
+    val cos = cosSql("e.embedding", "q.q_embedding",
+      s"sqrt(${dotSql("e.embedding", "e.embedding")})", "q.q_nrm")
     // The r12 driver checker OOM'd on this oracle: `assigned` (the full
     // cross-join + ranking chain carrying embedding+nrm per row) was a
     // PLAIN CTE consumed twice (q, main select), so DuckDB inlined and
@@ -993,7 +1001,7 @@ object VectorQueries {
   }
 
   val ivfMultiprobeSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH assigned AS ($ivfAssignedSql),
        |q AS (SELECT embedding AS q_embedding, nrm AS q_nrm
        |      FROM assigned WHERE vec_id = 0),
@@ -1036,7 +1044,7 @@ object VectorQueries {
   }
 
   val annRecallSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding, ($bucketSql) AS bucket,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm
        |            FROM embeddings),
@@ -1607,7 +1615,7 @@ object VectorQueries {
   }
 
   val knnEvalSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm
        |            FROM embeddings),
@@ -1675,8 +1683,8 @@ object VectorQueries {
   }
 
   val recallCurveSql: String = {
-    val cos = s"CASE WHEN round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "q.q_embedding")}) / (a.nrm * q.q_nrm), 6) END"
-    val cosIvf = s"CASE WHEN round((${dotSql("a.embedding", "qi.q_embedding")}) / (a.nrm * qi.q_nrm), 6) = 0 THEN 0.0 ELSE round((${dotSql("a.embedding", "qi.q_embedding")}) / (a.nrm * qi.q_nrm), 6) END"
+    val cos = cosSql("a.embedding", "q.q_embedding", "a.nrm", "q.q_nrm")
+    val cosIvf = cosSql("a.embedding", "qi.q_embedding", "a.nrm", "qi.q_nrm")
     s"""WITH be AS (SELECT vec_id, label, embedding, ($bucketSql) AS bucket,
        |            sqrt(${dotSql("embedding", "embedding")}) AS nrm
        |            FROM embeddings),

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.obs.Json
 import graft.operators.TextQueries
 
 /** Blocking-selectivity diagnostics for the dedup scaling studies
@@ -168,11 +169,6 @@ object BlockingDiag {
     val spark = graft.Session.local("blocking-diag")
     val fields = Seq("n_docs", "n_blocks", "max_block", "cand_pairs",
       "dropped_blocks", "dropped_pairs")
-    // SPARK_GRAFT_FAMILIES=vec_lsh,vec_lsh_banded — restrict to the
-    // families under study (skips re-measuring the text keys when only
-    // a vector decade was added)
-    val familyFilter = sys.env.get("SPARK_GRAFT_FAMILIES")
-      .map(_.split(",").map(_.trim).toSet)
     // thunks, not DataFrames: reading a table at construction would
     // fail on partial corpora (docs-only sf10, vecs-only decades)
     for (d <- dirs;
@@ -187,8 +183,7 @@ object BlockingDiag {
                "vec_lsh_banded" -> (() => vecLshBandedBlocks(spark, d)),
                "vec_semantic" -> (() => vecSemanticBlocks(spark, d))) else Nil) ++
            (if (new java.io.File(s"$d/events.parquet").exists())
-             Seq("ts_shape" -> (() => tsShapeBlocks(spark, d))) else Nil))
-           .filter(fb => familyFilter.forall(_.contains(fb._1)))) {
+             Seq("ts_shape" -> (() => tsShapeBlocks(spark, d))) else Nil))) {
       val blocks = mk()
       // the text operators cap degenerate blocks; the vector families
       // score every bucket pair — report their full candidate count
@@ -196,8 +191,8 @@ object BlockingDiag {
         if (family.startsWith("vec")) Long.MaxValue
         else if (family == "rare_gram") TextQueries.RareGramDfCap.toLong
         else TextQueries.DegenerateBlockCap.toLong)
-      val body = fields.map(f => s""""$f":${st(f)}""").mkString(",")
-      println(s"""{"dir":"$d","family":"$family",$body}""")
+      println(Json.obj(Seq("dir" -> d, "family" -> family) ++
+        fields.map(f => f -> st(f)): _*).json)
     }
     if (sys.env.get("SPARK_GRAFT_SEMANTIC_RECALL").contains("1"))
       for (d <- dirs if new java.io.File(s"$d/embeddings.parquet").exists();
@@ -210,10 +205,10 @@ object BlockingDiag {
            // note)
            theta <- Seq(0.4, 0.7, 0.9)) {
         val r = semanticRecall(spark, d, theta)
-        val body = Seq("anchors", "stride", "corpus_rows", "coverage_ppm",
-          "true_pairs", "same_cluster_pairs")
-          .map(f => s""""$f":${r(f)}""").mkString(",")
-        println(s"""{"dir":"$d","family":"vec_semantic_recall","theta":$theta,$body}""")
+        println(Json.obj(Seq("dir" -> d, "family" -> "vec_semantic_recall",
+          "theta" -> Json.fixed(theta, 1)) ++
+          Seq("anchors", "stride", "corpus_rows", "coverage_ppm", "true_pairs",
+            "same_cluster_pairs").map(f => f -> r(f)): _*).json)
       }
     spark.stop()
   }

@@ -322,4 +322,10 @@ for name, sql in sorted(oracle.items()):
     print(f"ok   {name} ({len(exp_rows)} rows, cols={got_cols})")
 
 print(f"\n{len(oracle) if not only else len(only)} checked, {len(fails)} failed: {fails}")
+# close the native DuckDB handles before interpreter teardown, where a
+# passing run with both still open once died of SIGABRT ("terminate
+# called without an active exception") after printing its summary
+con.close()
+if con_noopt is not None:
+    con_noopt.close()
 sys.exit(1 if fails else 0)
